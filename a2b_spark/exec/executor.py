@@ -116,6 +116,31 @@ def _changed_rows(mapper: MappingStore, m: Migration, entity: DataFrame) -> Data
     ).drop(F.col("__prev_hash"), *[prev_h[src_col(f)] for f in m.source_ids])
 
 
+def _pruned_mappings(
+    mapper: MappingStore, m: Migration, orphan_ids: DataFrame
+) -> DataFrame:
+    """Mapping rows of the orphans a prune deletes, in mapping-batch
+    shape with a NULL ``row_hash``. Orphan-preserve rows (all-NULL
+    source ids) are not addressable by source key and stay out."""
+    prev = mapper.load(m.mapping_key(), m.source_ids, m.destination_ids)
+    not_all_null = None
+    for f in m.source_ids:
+        c = prev[src_col(f)].isNotNull()
+        not_all_null = c if not_all_null is None else (not_all_null | c)
+    renamed = orphan_ids.select(
+        *[F.col(f.name).alias(dest_col(f)) for f in m.destination_ids]
+    )
+    return (
+        prev.filter(not_all_null)
+        .join(renamed, on=[dest_col(f) for f in m.destination_ids], how="left_semi")
+        .select(
+            *[src_col(f) for f in m.source_ids],
+            *[dest_col(f) for f in m.destination_ids],
+            F.lit(None).cast("long").alias("row_hash"),
+        )
+    )
+
+
 def existing_field(df: DataFrame, name: str, default) -> F.Column:
     """Read a field off the previously-migrated entity, with a default
     for rows (or runs) where no prior entity exists — the declarative
@@ -382,39 +407,56 @@ def run_migration(
         else:
             write_set = entity
             rows_written = rows_processed
-        if rows_written or not incremental:
-            m.destination.merge(write_set.drop(SRC_STRUCT, ROW_HASH))
 
-            if record_mappings:
-                # non-incremental runs must NULL the stored hash for
-                # every row they rewrite: leaving a stale hash behind
-                # would make a LATER incremental run silently skip a
-                # row whose content rolled back to the hashed value
-                # while the destination holds something else entirely
-                # (round-6 review, reproduced)
-                mb = mapping_batch(
-                    write_set,
-                    m.source_ids,
-                    m.destination_ids,
-                    extra_cols={
-                        "row_hash": F.col(ROW_HASH)
-                        if incremental
-                        else F.lit(None).cast("long")
-                    },
-                )
-                mapper.merge(
-                    m.mapping_key(), mb, m.source_ids, m.destination_ids, STATUS_MIGRATED
-                )
-
-        orphans_df = None
+        # orphans are diffed against the PRE-RUN snapshot, so they are
+        # known before any commit. Pinned (lazily: the count is the
+        # materializing job) because prune consults them twice more —
+        # the mapping merge and the destination delete
+        orphan_ids = None
         orphan_count = 0
         if existing_ids is not None:
-            new_ids = entity.select(*dest_names)
-            orphan_ids = existing_ids.join(new_ids, on=dest_names, how="left_anti")
+            orphan_ids = existing_ids.join(
+                entity.select(*dest_names), on=dest_names, how="left_anti"
+            ).localCheckpoint(eager=False)
+            orphan_count = orphan_ids.count()
+        prune = orphan_policy == "prune" and orphan_count > 0
+
+        if rows_written or not incremental:
+            m.destination.merge(write_set.drop(SRC_STRUCT, ROW_HASH))
+        if record_mappings and (rows_written or not incremental or prune):
+            # non-incremental runs must NULL the stored hash for
+            # every row they rewrite: leaving a stale hash behind
+            # would make a LATER incremental run silently skip a
+            # row whose content rolled back to the hashed value
+            # while the destination holds something else entirely
+            # (round-6 review, reproduced)
+            mb = mapping_batch(
+                write_set,
+                m.source_ids,
+                m.destination_ids,
+                extra_cols={
+                    "row_hash": F.col(ROW_HASH)
+                    if incremental
+                    else F.lit(None).cast("long")
+                },
+            )
+            if prune:
+                # prune keeps a pruned row's mapping (its dest id
+                # survives a return) but NULLs its stored hash in the
+                # same mapping commit, so an incremental run re-inserts
+                # the row when it comes back with unchanged content
+                mb = mb.unionByName(
+                    _pruned_mappings(mapper, m, orphan_ids)
+                )
+            mapper.merge(
+                m.mapping_key(), mb, m.source_ids, m.destination_ids, STATUS_MIGRATED
+            )
+
+        orphans_df = None
+        if existing_ids is not None:
             # Materialize the orphan rows (readMultiple analogue, C6)
             orphan_rows = snap.join(orphan_ids, on=dest_names, how="left_semi")
-            orphan_count = orphan_ids.count()
-            if orphan_policy == "prune" and orphan_count:
+            if prune:
                 m.destination.delete_keys(orphan_ids)
             elif orphan_policy == "preserve" and orphan_count:
                 # Reference --preserve: keep rows and add mapping rows with

@@ -7,12 +7,13 @@ anti-pattern at distributed scale. The Spark-idiomatic equivalents:
 * ``Observation`` — row metrics piggybacked on an existing action
   (zero extra jobs): the executor counts rows_in on the same pass that
   materializes the entity batch, where the reference walks the rows.
-* Job-group metrics — every migration runs under a ``a2b:<name>`` job
-  group (runner.py); ``job_group_metrics`` aggregates job/stage/task
-  counts from the driver's status tracker after the run, the numbers a
-  progress UI or scheduler dashboard wants.
+* Job-group metrics — every migration RUN has its own
+  ``a2b:<name>:<run id>`` job group (runner.py); ``job_group_metrics``
+  aggregates job/stage/task counts from the driver's status tracker
+  after the run, the numbers a progress UI or scheduler dashboard
+  wants.
 * The Spark UI itself carries the live fine-grained progress under the
-  same job-group label.
+  same job-group labels.
 """
 
 from __future__ import annotations

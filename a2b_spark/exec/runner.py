@@ -23,6 +23,7 @@ Spark-first differences:
 from __future__ import annotations
 
 import dataclasses
+import uuid
 from concurrent.futures import ThreadPoolExecutor
 from typing import Callable, Optional, Sequence
 
@@ -59,10 +60,13 @@ def run_pipeline(
     with_deps: bool = True,
     max_parallel: int = 4,
     progress: ProgressFn = _default_progress,
+    incremental: bool = False,
 ) -> dict[str, MigrationResult]:
     """Select → resolve DAG → execute level-by-level, independent
     migrations within a level in parallel driver threads (each level is
-    a barrier: level N+1 may reference level N's output)."""
+    a barrier: level N+1 may reference level N's output).
+    ``incremental`` passes through to :func:`run_migration` (a
+    simulated run records no mappings, so it never runs incremental)."""
     selected = registry.select(groups=groups, names=names)
     for m in selected:
         registry.validate_extends(m)
@@ -74,7 +78,10 @@ def run_pipeline(
         target = simulate_migration(m) if simulate else m
         sc = spark.sparkContext
         sc.setLocalProperty("spark.scheduler.pool", "a2b")
-        sc.setJobGroup(f"a2b:{m.name}", f"migration {m.name}", interruptOnCancel=False)
+        # one job group per RUN: the status tracker keeps every group's
+        # jobs, so a per-name group would sum all earlier runs
+        group = f"a2b:{m.name}:{uuid.uuid4().hex}"
+        sc.setJobGroup(group, f"migration {m.name}", interruptOnCancel=False)
         progress("start", m.name, None)
         try:
             # simulate: nothing persists — neither destination rows (the
@@ -86,6 +93,7 @@ def run_pipeline(
                 mapper,
                 orphan_policy=orphan_policy,
                 record_mappings=not simulate,
+                incremental=incremental and not simulate,
             )
         finally:
             sc.setJobGroup(None, None)
@@ -94,7 +102,7 @@ def run_pipeline(
         # under the same label)
         from a2b_spark.exec.metrics import job_group_metrics
 
-        r.spark_metrics = job_group_metrics(sc, f"a2b:{m.name}")
+        r.spark_metrics = job_group_metrics(sc, group)
         progress("done", m.name, r)
         return r
 
@@ -148,7 +156,8 @@ def run_pipeline(
 
 def main(argv: Optional[Sequence[str]] = None) -> int:
     """CLI: ``python -m a2b_spark.exec.runner --module mypipeline
-    [--group g ...] [--name n ...] [--simulate] [--prune|--preserve]``.
+    [--group g ...] [--name n ...] [--simulate] [--prune|--preserve]
+    [--incremental]``.
     ``--module`` must expose ``REGISTRY`` (a MigrationRegistry) and
     ``MAPPING_DIR``; mirrors the reference's tagged-service discovery
     as plain Python imports."""
@@ -166,6 +175,7 @@ def main(argv: Optional[Sequence[str]] = None) -> int:
     ex = p.add_mutually_exclusive_group()
     ex.add_argument("--prune", action="store_true")
     ex.add_argument("--preserve", action="store_true")
+    p.add_argument("--incremental", action="store_true")
     args = p.parse_args(argv)
 
     mod = importlib.import_module(args.module)
@@ -180,6 +190,7 @@ def main(argv: Optional[Sequence[str]] = None) -> int:
         orphan_policy=policy,
         simulate=args.simulate,
         with_deps=not args.no_deps,
+        incremental=args.incremental,
     )
     return 0 if results is not None else 1
 

@@ -10,8 +10,9 @@ cross-migration references.
 Spark design: one keyed Parquet table per mapping key under a base
 directory; all lookups are joins (broadcast when small), never
 driver-side point reads. At 100 TB the mapping table is itself big —
-it merges through the same partition-aware ``merge_keyed`` path and
-lookups stay distributed joins on the source-key columns.
+it merges merge-on-read with deletion vectors (O(changed rows) written
+per re-run, see storage/table.py) and lookups stay distributed joins
+on the source-key columns.
 """
 
 from __future__ import annotations
@@ -78,7 +79,12 @@ class MappingStore:
             if key_side == "source"
             else [dest_col(f) for f in dest_ids]
         )
-        return VersionedParquetTable(self.path(mapping_key), keys)
+        # deletion vectors: a re-run's mapping merge touches one row per
+        # changed source row, so it commits merge-on-read (new rows as
+        # new files, old rows tombstoned) instead of rewriting the table
+        return VersionedParquetTable(
+            self.path(mapping_key), keys, deletion_vectors=True
+        )
 
     def load(
         self, mapping_key: str, source_ids: Sequence[IdField], dest_ids: Sequence[IdField]

@@ -28,10 +28,13 @@ class VersionedTableDestination:
         path: str,
         key_cols: Sequence[str],
         partition_by: Optional[Sequence[str]] = None,
-        deletion_vectors: bool = False,
+        deletion_vectors: bool = True,
     ):
-        """``deletion_vectors`` passes through to the table (parquet
-        and ORC honor it; other formats delete via rewrite)."""
+        """``deletion_vectors`` passes through to the table: parquet
+        and ORC tables then merge and delete merge-on-read (see
+        storage/table.py); other formats rewrite. The ORC sink passes
+        False unless asked, so its version dirs stay plain ORC that an
+        ORC reader sees whole."""
         from a2b_spark.storage.table import VersionedParquetTable
 
         self.table = VersionedParquetTable(

@@ -369,11 +369,14 @@ def collect_orc_footer_stats(
             full = os.path.join(version_dir, rel)
             jpath = jvm.org.apache.hadoop.fs.Path("file://" + full)
             reader = orcfile.createReader(jpath, orcfile.readerOptions(hconf))
-            schema = reader.getSchema()
+            try:  # the footer is all we need: release the file handle
+                schema = reader.getSchema()
+                rows = int(reader.getNumberOfRows())
+                stats = reader.getStatistics()
+            finally:
+                reader.close()
             if schema.getCategory().getName() != "struct":
                 return None
-            rows = int(reader.getNumberOfRows())
-            stats = reader.getStatistics()
             names = list(schema.getFieldNames())
             children = schema.getChildren()
             cols: dict[str, dict] = {}

@@ -23,6 +23,16 @@ real table formats do:
   the untouched partition files into the new version (metadata-only
   copy, the local-FS analogue of Iceberg manifest reuse). Cost is
   O(touched data + total file count), not O(table).
+- Keyed merges and deletes on an unpartitioned parquet/ORC table with
+  ``deletion_vectors`` commit MERGE-ON-READ: the batch is written as
+  new files, every base data file is hard-linked, and each matched old
+  row is tombstoned by a file-scoped ``(data file name, key)`` entry in
+  the version's deletion vector (see ``DV_DIR``). Reads anti-join the
+  vector on ``_metadata.file_name`` + key. A write then costs
+  O(changed rows), even when the ``_STATS`` key bands of hashed ids
+  cannot prune any file. A file whose tombstoned share passes
+  ``DV_FOLD_FRACTION`` is folded: its live rows ride the next merge's
+  new files and the file is dropped.
 - ``vacuum`` trims old versions (default retention 3) at commit time.
 
 On a real cluster this module is the seam where Delta/Iceberg slots
@@ -55,17 +65,27 @@ DROPPED = "_DROPPED"
 # at commit time so streams read files instead of re-deriving diffs)
 CDF_ENABLED = "_CDF_ENABLED"
 CDF_DIR = "_cdf"
-# DELETION VECTORS (Delta DV analogue, key-list form): a version's
-# ``_dv/`` parquet holds the key tuples logically deleted from its
-# still-hardlinked data files; every read anti-joins it (broadcast —
-# the set is capped). A small delete then commits METADATA-SIZED: all
-# data files hardlink, only the key list is written. Any full rewrite
-# (overwrite/compact/unpartitioned append) physically purges and
-# clears the vector; a pruned merge re-introducing a tombstoned key
-# rewrites that key's stats-matching files and drops it from the
-# carried vector.
+# DELETION VECTORS (Delta DV / Iceberg position-delete analogue,
+# file-scoped): a version's ``_dv/`` holds parquet DELTA files, one per
+# commit that tombstoned rows, each listing ``(DV_FILE, *key_cols)``
+# entries: "the row with this key in the data file with this name is
+# deleted". Every read anti-joins the union (broadcast: the entry count
+# is capped) on ``_metadata.file_name`` + key, so a tombstone hides
+# exactly one physical row and never a newer row of the same key in
+# another file. A commit carries the base's deltas by HARDLINK and drops
+# the entries of data files it no longer links (a delta that loses some
+# entries is rewritten filtered), so vector bytes per commit are
+# O(new tombstones). Any full rewrite (overwrite/compact/unpartitioned
+# append) physically purges and clears the vector.
 DV_DIR = "_dv"
-DV_MAX_KEYS = 1 << 16  # beyond this, fall back to the rewrite path
+DV_FILE = "_dv_file"  # the data-file-name column of a vector entry
+_DV_HASH = "_dv_hash"  # transient join key of the read-side anti join
+DV_MAX_KEYS = 1 << 16  # broadcast guard: beyond this, rewrite instead
+# fold rule of the merge-on-read merge: a data file whose tombstoned
+# share of rows passes this fraction is rewritten (its live rows join
+# the merge's new files) instead of hard-linked, and its entries leave
+# the vector. A fully tombstoned file is simply dropped.
+DV_FOLD_FRACTION = 0.5
 # Per-commit list of the data files THIS commit freshly wrote (JSON,
 # relative paths) — recorded before any hardlink step, so it is
 # exactly the new bytes. The appends-stream planner reads it instead
@@ -172,18 +192,19 @@ class VersionedParquetTable:
         restoring strictly O(touched) merges for bucket-partitioned
         stores (streaming history tables).
 
-        ``deletion_vectors``: WRITE-side opt-in (Delta DV analogue) —
-        small deletes on a parquet or ORC table (partitioned or not)
-        commit as a metadata-sized tombstone key list instead of rewriting
-        any data file or partition (see the ``DV_DIR`` note).
-        Partitioned commits carry the vector; merge rewrites a
-        re-introduced key's stale partition and trims it; append of a
-        tombstoned key fails loudly (merge or purge first);
-        ``purge_deleted`` rewrites only the partitions that hold
-        tombstoned bytes. Read-side application is unconditional: any
-        handle reading a version that carries a ``_dv/`` vector
-        applies it, flag or not — correctness lives in the data, not
-        the handle."""
+        ``deletion_vectors``: WRITE-side opt-in (Delta DV analogue) on
+        a parquet or ORC table. Small deletes (partitioned or not) and
+        keyed merges into an unpartitioned table commit merge-on-read:
+        data files hardlink, matched rows are tombstoned in the
+        file-scoped vector (see the ``DV_DIR`` note), and a merge writes
+        only its batch. Partitioned commits carry the vector; a
+        partitioned merge rewrites a re-introduced key's stale partition;
+        append of a tombstoned key into a partitioned table fails loudly
+        (merge or purge first); ``purge_deleted`` rewrites only the files
+        (or partitions) that hold tombstoned bytes. Read-side application
+        is unconditional: any handle reading a version that carries a
+        ``_dv/`` vector applies it, flag or not — correctness lives in
+        the data, not the handle."""
         if fmt not in _FORMAT_OPTIONS:
             raise ValueError(f"unsupported table format {fmt!r}")
         self.path = path
@@ -355,92 +376,133 @@ class VersionedParquetTable:
         return reader.load(vdir)
 
     # -------------------------------------------------- deletion vectors
-    def _dv_df(self, spark: SparkSession, version: str) -> Optional[DataFrame]:
-        """The version's deletion-vector key list (None when it carries
-        none), cast to the version's CURRENT key types so a vector
-        written before a type widening still matches."""
-        d = os.path.join(self.path, version, DV_DIR)
-        if not os.path.isdir(d) or not self.key_cols:
-            return None
-        reader = spark.read
-        try:
-            # the vector is a parquet this class itself wrote: its
-            # footer schema (one driver-side pyarrow read) given to the
-            # reader explicitly skips Spark's schema-inference job —
-            # one fewer action per DV consult. Any conversion surprise
-            # falls back to inference, never to a wrong schema.
-            import pyarrow.parquet as _pq
-            from pyspark.sql.pandas.types import from_arrow_schema
+    def _dv_deltas(self, vdir: str) -> list[str]:
+        """Absolute paths of the version's vector delta files (see the
+        ``DV_DIR`` note), sorted; empty when it carries no vector."""
+        d = os.path.join(vdir, DV_DIR)
+        if not self.key_cols or not os.path.isdir(d):
+            return []
+        return sorted(
+            os.path.join(d, f) for f in os.listdir(d) if f.endswith(".parquet")
+        )
 
-            # _stage_dv writes exactly one parquet file; sorted() keeps
-            # the pick deterministic if that ever changes
-            fs = sorted(f for f in os.listdir(d) if f.endswith(".parquet"))
-            if fs:
-                reader = reader.schema(
-                    from_arrow_schema(
-                        _pq.read_schema(os.path.join(d, fs[0]))
+    def _file_id_col(self):
+        """The identity a vector entry gives the data file of a scanned
+        row: its file name, under its ``col=value/`` partition path on a
+        partitioned table (Spark names the files of one write alike in
+        every partition). Values are Spark's cast('string'), the dialect
+        ``_leaf_partitions`` and ``_partition_filter`` speak."""
+        name = F.col("_metadata.file_name")
+        if not self.partition_by:
+            return name
+        return F.concat_ws(
+            "/",
+            *[
+                F.concat(F.lit(f"{c}="), F.col(c).cast("string"))
+                for c in self.partition_by
+            ],
+            name,
+        )
+
+    def _file_ids(self, vdir: str) -> dict[str, str]:
+        """Relative data-file path → its identity in vector entries
+        (see :meth:`_file_id_col`), for every data file of ``vdir``."""
+        from a2b_spark.storage import stats as _stats
+
+        if not self.partition_by:
+            return {r: os.path.basename(r) for r in _stats._data_files(vdir)}
+        out = {}
+        for leaf, values in _leaf_partitions(vdir, len(self.partition_by)):
+            prefix = "/".join(
+                f"{c}={v}" for c, v in zip(self.partition_by, values)
+            )
+            for fn in os.listdir(leaf):
+                if not fn.startswith(("_", ".")):
+                    out[os.path.relpath(os.path.join(leaf, fn), vdir)] = (
+                        f"{prefix}/{fn}"
                     )
-                )
-        except (ImportError, ValueError, TypeError, KeyError):
-            # only the expected conversion/availability surprises fall
-            # back to Spark's schema inference; a genuine I/O error
-            # (corrupt vector file) must surface at read time below,
-            # not be silently deferred by a blanket except
-            pass
-        dv = reader.parquet(d)
+        return out
+
+    def _dv_df(self, spark: SparkSession, version: str) -> Optional[DataFrame]:
+        """The version's deletion vector as ``(DV_FILE, *key_cols)``
+        rows (None when it carries none), read under the version's
+        CURRENT key types so entries written before a type widening
+        still match. The explicit schema comes from the ``_SCHEMA``
+        sidecar, which skips Spark's schema-inference job; a version
+        without a sidecar falls back to inference."""
+        deltas = self._dv_deltas(os.path.join(self.path, version))
+        if not deltas:
+            return None
+        from pyspark.sql import types as T
+
+        reader = spark.read
         schema = self._version_schema(version)
         if schema is not None:
-            dv = dv.select(
-                *[
-                    F.col(k).cast(schema[k].dataType).alias(k)
-                    for k in self.key_cols
-                ]
+            reader = reader.schema(
+                T.StructType(
+                    [T.StructField(DV_FILE, T.StringType())]
+                    + [schema[k] for k in self.key_cols]
+                )
             )
-        return dv
+        return reader.parquet(*deltas)
 
-    def _dv_count(self, version: str) -> int:
-        """Row count of the version's deletion vector WITHOUT a Spark
-        job: the vector is a local key-list parquet this class itself
-        wrote, so the footer metadata answers exactly (the keys are
-        distinct by the union-of-disjoint construction). Driver-side
-        pyarrow, O(files) footer reads."""
-        d = os.path.join(self.path, version, DV_DIR)
-        if not os.path.isdir(d) or not self.key_cols:
-            return 0
+    def _dv_file_counts(self, vdir: str) -> dict[str, int]:
+        """Tombstoned rows per data-file identity in the version's vector —
+        a driver-side read of the deltas' file column (the vector is
+        capped at DV_MAX_KEYS entries)."""
         import pyarrow.parquet as _pq
+        from collections import Counter
 
-        return sum(
-            _pq.ParquetFile(os.path.join(d, f)).metadata.num_rows
-            for f in os.listdir(d)
-            if f.endswith(".parquet")
-        )
+        counts: Counter = Counter()
+        for p in self._dv_deltas(vdir):
+            counts.update(_pq.read_table(p, columns=[DV_FILE]).column(0).to_pylist())
+        return dict(counts)
 
     def _apply_dv(
         self,
         spark: SparkSession,
         df: DataFrame,
         vdir: str,
-        dv: Optional[DataFrame] = _UNSET_BASE,
+        keep_file: bool = False,
     ) -> DataFrame:
-        """Anti-join the version's deletion vector onto a data read —
-        a BROADCAST anti join (the vector is capped at DV_MAX_KEYS), so
-        applying it costs one map-side pass, never a shuffle. ``dv``:
-        pass the already-loaded vector frame (or None for "no vector")
-        to skip re-reading ``_dv/`` — callers that consult the vector
-        themselves (the pruned merge) otherwise pay a second footer
-        read + plan round-trip per commit."""
-        version = os.path.basename(vdir)
-        if dv is _UNSET_BASE:
-            dv = self._dv_df(spark, version)
+        """Anti-join the version's deletion vector onto a data SCAN of
+        that version, on the scan's file identity + key — a
+        BROADCAST anti join (the vector is capped at DV_MAX_KEYS), so
+        applying it costs one map-side pass, never a shuffle.
+        ``keep_file``: keep the data-file identity as a ``DV_FILE``
+        column, which the merge-on-read paths turn into new vector
+        entries."""
+        dv = self._dv_df(spark, os.path.basename(vdir))
+        if keep_file or dv is not None:
+            df = df.withColumn(DV_FILE, self._file_id_col())
         if dv is None:
             return df
-        from a2b_spark.storage.diff import null_safe_key_cond
+        # the join key is ONE 64-bit hash of the entry, so Spark builds a
+        # long-keyed hash relation (a multi-column key would allocate a
+        # memory page per broadcast — tens of MB of heap churn per
+        # read); the exact, NULL-safe entry match is the join condition
+        # (a struct comparison, not an equality Spark would turn into
+        # another hash key), so a hash collision never hides a row
+        cols = (DV_FILE, *self.key_cols)
 
-        return df.alias("__data").join(
-            F.broadcast(dv.alias("__dv")),
-            null_safe_key_cond(self.key_cols, "__data", "__dv"),
-            "left_anti",
+        def entry(side: str):
+            return F.struct(
+                *[F.col(f"{side}.{c}").alias(f"c{i}") for i, c in enumerate(cols)]
+            )
+
+        out = (
+            df.withColumn(_DV_HASH, F.xxhash64(*cols)).alias("__data")
+            .join(
+                F.broadcast(
+                    dv.withColumn(_DV_HASH, F.xxhash64(*cols)).alias("__dv")
+                ),
+                (F.col(f"__data.{_DV_HASH}") == F.col(f"__dv.{_DV_HASH}"))
+                & F.array_contains(F.array(entry("__dv")), entry("__data")),
+                "left_anti",
+            )
+            .drop(_DV_HASH)
         )
+        return out if keep_file else out.drop(DV_FILE)
 
     # ----------------------------------------------------- file skipping
     def _write_added_sidecar(self, tmp_target: str) -> None:
@@ -573,7 +635,9 @@ class VersionedParquetTable:
         # null-fill the new column instead of steering footer inference
         if sidecar_schema is not None:
             reader = reader.schema(sidecar_schema)
-        return self._apply_dv(spark, reader.load(kept).filter(cond), vdir)
+        # the vector anti-joins the SCAN (it keys on the scan's file
+        # names); the filter still pushes down below the join
+        return self._apply_dv(spark, reader.load(kept), vdir).filter(cond)
 
     # ------------------------------------------------------------ writes
     def _next_version(self) -> str:
@@ -841,9 +905,7 @@ class VersionedParquetTable:
         # commit-scoped): the hardlinked data files still hold the
         # tombstoned bytes, so restore/clone/constraint commits must
         # carry the source version's vector or those rows resurrect
-        dv_src = os.path.join(src_dir, DV_DIR)
-        if os.path.isdir(dv_src):
-            shutil.copytree(dv_src, os.path.join(tmp_target, DV_DIR))
+        self._stage_dv(tmp_target, src_dir)
         self._write_cdf(tmp_target, cdf_df)
         with open(os.path.join(tmp_target, ADDED), "w") as f:
             f.write("[]")  # every data file hardlinks: no new bytes
@@ -1300,30 +1362,34 @@ class VersionedParquetTable:
         tombstone_clash = bool(
             self._dropped_tombstones(base) & set(batch.columns)
         )
-        # PIN the batch once (eager localCheckpoint, the repo's
-        # fan-out-frame discipline, like delete_keys pins its key set):
-        # merge consults it from up to 4 independent actions — the
-        # _prunable_key_files pre-check/distinct collects, the touched-
+        # PIN the batch once (the repo's fan-out-frame discipline, like
+        # delete_keys pins its key set): merge consults it from up to 4
+        # independent actions — the _prunable_key_files pre-check/
+        # distinct collects or the merge-on-read match, the touched-
         # partition collects, the staged data write, and the CDF
         # change-file write. A non-deterministic batch (sampled/rand
         # lineage) re-evaluated per action could prune files by key set
         # A, commit data for set B, and record change rows for set C.
         # Skipped only when exactly one action will consult it (the
         # unpartitioned tombstone-clash full rewrite without CDF). On
-        # the partitioned-merge path the pin job ALSO answers which
-        # partitions the batch touches (observation riding the
-        # checkpoint pass — same fold as append's).
+        # the partitioned-merge path the pin is lazy and the touched-
+        # partition collect is its materializing job (see
+        # _pin_with_touched).
         touched_pre: Optional[set] = None
         if self.partition_by and not tombstone_clash:
             batch, touched_pre = self._pin_with_touched(batch)
         elif self.partition_by or not tombstone_clash or self.cdf_enabled(base):
             batch = batch.localCheckpoint(eager=True)
-        if (
-            not self.partition_by
-            and not tombstone_clash
-            and self._try_merge_file_pruned(spark, batch, base)
-        ):
-            return
+        if not self.partition_by and not tombstone_clash:
+            # copy-on-write when _STATS isolates the matching files
+            # (key-clustered tables), else merge-on-read with vectors
+            mor = self.deletion_vectors and self.fmt in ("parquet", "orc")
+            if (
+                not mor or self._stats_may_isolate(os.path.join(self.path, base))
+            ) and self._try_merge_file_pruned(spark, batch, base):
+                return
+            if mor and self._try_merge_on_read(spark, batch, base):
+                return
         current = self.read(spark, version=base)  # pinned snapshot
         cdf = None
         if self.cdf_enabled(base):
@@ -1414,7 +1480,7 @@ class VersionedParquetTable:
                     info = self._prunable_key_files(batch, base)
                     if info is not None:
                         kept_abs, _, schema = info
-                        probe = self._read_files(
+                        probe = self._scan_files(
                             batch.sparkSession, base, kept_abs, schema
                         )
                 elif self.partitions_derived_from_keys:
@@ -1585,10 +1651,10 @@ class VersionedParquetTable:
             if not touched:
                 return
             scoped = current.filter(self._partition_filter(touched))
-            # dv_df=None CARRIES any live vector: its keys in the
-            # rewritten partitions are staged out by the DV-filtered
-            # read (stale entries are no-op anti joins); keys in
-            # hardlinked partitions still need it
+            # the commit CARRIES any live vector: entries of the
+            # rewritten partitions' files leave it (their rows were
+            # staged from the DV-filtered read); hardlinked partitions
+            # still need theirs
             self._commit_touched(
                 _remaining(scoped),
                 touched,
@@ -1600,7 +1666,7 @@ class VersionedParquetTable:
         kept_info = self._prunable_key_files(keys, base, pinned_distinct=True)
         if kept_info is not None:
             kept_abs, keep_rels, schema = kept_info
-            scoped = self._read_files(
+            scoped = self._scan_files(
                 keys_df.sparkSession, base, kept_abs, schema
             )
             self._commit_linked_files(
@@ -1676,8 +1742,6 @@ class VersionedParquetTable:
         base=_UNSET_BASE,
         extra_files: Optional[dict] = None,
         cdf_df: Optional[DataFrame] = None,
-        dv_df: Optional[DataFrame] = None,
-        dv_state: Optional[str] = None,
     ) -> None:
         """Write a new version containing ``touched_df`` (the new
         contents of the touched partitions) and hard-link every
@@ -1685,12 +1749,10 @@ class VersionedParquetTable:
         metadata-only copy, the local-FS analogue of Iceberg manifest
         reuse. Cost: O(touched data + total file count).
 
-        ``dv_df`` follows :meth:`_commit_linked_files`'s contract:
-        None CARRIES the hardlink source's deletion vector (untouched
-        partitions may still hold tombstoned bytes; rewritten
-        partitions were staged from the DV-FILTERED read, so stale
-        vector entries for them are harmless no-op anti joins); a
-        DataFrame REPLACES it (empty = cleared)."""
+        The deletion vector carries (untouched partitions may still
+        hold tombstoned bytes); entries of the rewritten partitions'
+        files leave it, those partitions having been staged from the
+        DV-FILTERED read."""
         old_version = self.current_version()
         if base is _UNSET_BASE:
             base = old_version
@@ -1754,7 +1816,7 @@ class VersionedParquetTable:
         # against the dir the untouched partitions were linked FROM
         self._write_stats_sidecar(tmp_target, old_version)
         self._carry_forward_metadata(tmp_target, old_version)
-        self._stage_dv(tmp_target, old_version, dv_df, dv_state=dv_state)
+        self._stage_dv(tmp_target, old_dir)
         self._claim_version_dir(tmp_target, version)
         self._commit(version, base=base)
 
@@ -1795,7 +1857,6 @@ class VersionedParquetTable:
             touched = touched | self._key_match_partitions(current, batch)
         if not touched:
             return
-        dv_new = None
         dv = self._dv_df(spark, base)
         if dv is not None:
             # a merged key that was DV-tombstoned is RE-INTRODUCED:
@@ -1824,19 +1885,13 @@ class VersionedParquetTable:
                     .select(*self.partition_by)
                 )
             # every re-introduced key's stale bytes now sit in a
-            # rewritten (DV-filtered) partition: trim it; other keys
-            # stay (their bytes remain hardlinked)
-            dv_new = dv.alias("__dv").join(
-                batch.select(*self.key_cols).alias("__b"),
-                null_safe_key_cond(self.key_cols, "__dv", "__b"),
-                "left_anti",
-            )
+            # rewritten (DV-filtered) partition, whose old files — and
+            # so their vector entries — leave the new version
         merged_touched = merge_dataframes(
             current.filter(self._partition_filter(touched)), batch, self.key_cols
         )
         self._commit_touched(
-            merged_touched, touched, op="merge", base=base, cdf_df=cdf_df,
-            dv_df=dv_new,
+            merged_touched, touched, op="merge", base=base, cdf_df=cdf_df
         )
 
     # the key types whose batch min/max can be compared against file
@@ -1866,10 +1921,7 @@ class VersionedParquetTable:
         if info is None:
             return False
         kept_abs, keep_rels, schema = info
-        # load the vector ONCE: both the DV-filtered read and the
-        # re-introduction trim below consult it
-        dv = self._dv_df(spark, base)
-        current_touched = self._read_files(spark, base, kept_abs, schema, dv=dv)
+        current_touched = self._scan_files(spark, base, kept_abs, schema)
         merged = merge_dataframes(current_touched, batch, self.key_cols)
         cdf = None
         if self.cdf_enabled(base):
@@ -1881,22 +1933,115 @@ class VersionedParquetTable:
                 current_touched, batch, self.key_cols,
                 preimages=self.cdf_preimages(base),
             )
-        dv_new = None
-        if dv is not None:
-            # a merged key that was DV-tombstoned is RE-INTRODUCED by
-            # this commit: its stats-matching files (the only places
-            # its stale bytes live) are being rewritten DV-filtered
-            # right here, so the key leaves the vector — otherwise the
-            # fresh row would stay hidden at read
-            from a2b_spark.storage.diff import null_safe_key_cond
+        # the rewritten files were read DV-filtered, so their vector
+        # entries (a re-introduced key's included) leave with them
+        self._commit_linked_files(
+            merged, keep_rels, op="merge", base=base, cdf_df=cdf
+        )
+        return True
 
-            dv_new = dv.alias("__dv").join(
-                batch.select(*self.key_cols).alias("__b"),
-                null_safe_key_cond(self.key_cols, "__dv", "__b"),
-                "left_anti",
+    def _try_merge_on_read(
+        self, spark: SparkSession, batch: DataFrame, base: str
+    ) -> bool:
+        """MERGE-ON-READ keyed merge into an unpartitioned parquet/ORC
+        table with deletion vectors (Delta DV / Iceberg v2 position
+        deletes): the batch's merged rows are written as NEW files,
+        every base data file is HARDLINKED, and each matched old row is
+        tombstoned by a ``(data file name, key)`` vector entry. The
+        commit writes O(batch) bytes even when every file's ``_STATS``
+        key band spans the whole key range (salted hash ids,
+        hash-partitioned files), where file pruning keeps everything.
+
+        The match (one table scan, key columns only) is collected
+        driver-side as the vector entries, capped at DV_MAX_KEYS+1. A
+        batch carrying every table column IS the new rows; otherwise
+        the matched old rows fill the missing columns. Fold rule: a file
+        whose tombstoned share passes ``DV_FOLD_FRACTION`` is not
+        linked; its remaining live rows join this commit's new files
+        and its entries leave the vector.
+
+        Returns False (caller runs the full-rewrite path) when the base
+        has no data files, the merge would change the type of a stored
+        column (linked files keep their physical type), or the matched
+        rows plus the carried vector would pass DV_MAX_KEYS.
+
+        PRECONDITION: ``batch`` is pinned (merge() localCheckpoints
+        it) — it is consulted by the match, the merge and the CDF."""
+        from a2b_spark.storage import stats as _stats
+        from a2b_spark.storage.diff import merge_changes, null_safe_key_cond
+
+        vdir = os.path.join(self.path, base)
+        ids = self._file_ids(vdir)
+        all_rels = sorted(ids)
+        if not all_rels:
+            return False
+        schema = self._version_schema(base)
+        scan = self._scan_files(
+            spark, base, [os.path.join(vdir, r) for r in all_rels], schema,
+            keep_file=True,
+        )
+        stored = {f.name: f.dataType for f in scan.schema.fields}
+        if any(
+            f.name in stored and stored[f.name] != f.dataType
+            for f in batch.schema.fields
+        ):
+            return False
+        batch_keys = batch.select(*self.key_cols).alias("b")
+        matched = scan.alias("c").join(
+            batch_keys, null_safe_key_cond(self.key_cols, "c", "b"), "left_semi"
+        )
+        entries = (
+            matched.select(DV_FILE, *self.key_cols).limit(DV_MAX_KEYS + 1).toArrow()
+        )
+        carried = self._dv_file_counts(vdir)
+        if sum(carried.values()) + entries.num_rows > DV_MAX_KEYS:
+            return False
+        dead = dict(carried)
+        for name in entries.column(DV_FILE).to_pylist():
+            dead[name] = dead.get(name, 0) + 1
+        stats = _stats.load_stats_arrow(vdir)
+        rows = {} if stats is None else {
+            ids[rel]: n
+            for rel, n in zip(
+                stats.column("rel").to_pylist(), stats.column("rows").to_pylist()
+            )
+            if rel in ids
+        }
+        fold = {
+            name
+            for name, n_dead in dead.items()
+            if rows.get(name) and n_dead > DV_FOLD_FRACTION * rows[name]
+        }
+        # the old rows are re-derived (same immutable base version) only
+        # where needed: for CDF, and for columns the batch does not carry
+        old_rows = matched.drop(DV_FILE)
+        if set(stored) - {DV_FILE} <= set(batch.columns):
+            new_rows = batch  # each batch row replaces its old row whole
+        else:
+            new_rows = merge_dataframes(old_rows, batch, self.key_cols)
+        if any(dead[name] < rows[name] for name in fold):
+            # live rows of folded files not replaced by the batch
+            folded = [os.path.join(vdir, r) for r in all_rels if ids[r] in fold]
+            survivors = self._scan_files(spark, base, folded, schema).alias("c").join(
+                batch_keys, null_safe_key_cond(self.key_cols, "c", "b"), "left_anti"
+            )
+            new_rows = new_rows.unionByName(survivors, allowMissingColumns=True)
+        cdf = None
+        if self.cdf_enabled(base):
+            # matched rows are the only existing rows the batch can
+            # change, so the batch-sized change join over them equals
+            # the one over the whole table
+            cdf = merge_changes(
+                old_rows, batch, self.key_cols,
+                preimages=self.cdf_preimages(base),
             )
         self._commit_linked_files(
-            merged, keep_rels, op="merge", base=base, cdf_df=cdf, dv_df=dv_new
+            new_rows,
+            [r for r in all_rels if ids[r] not in fold],
+            op="merge",
+            base=base,
+            cdf_df=cdf,
+            dv_new=entries,
         )
         return True
 
@@ -1905,102 +2050,74 @@ class VersionedParquetTable:
         base: str,
     ) -> bool:
         """DELETION-VECTOR delete on a parquet or ORC table,
-        partitioned or not: commit = every data file HARDLINKED (the link loop
-        recreates partition subdirs) + the tombstone key list unioned
-        into ``_dv/`` — zero data files rewritten, metadata-sized
-        regardless of how large the touched files or partitions are
-        (the step past file-granular pruning, which still rewrites a
-        whole file to drop one row). Falls back (returns False) when
-        the combined vector would exceed DV_MAX_KEYS — the rewrite
-        paths then purge physically. No-op deletes (no live key
-        matched) return True without a commit, like the partitioned
-        path.
+        partitioned or not: commit = every data file HARDLINKED (the
+        link loop recreates partition subdirs) + one vector delta of
+        ``(data file name, key)`` entries for the matched rows — zero
+        data files rewritten, metadata-sized regardless of how large
+        the touched files or partitions are (the step past
+        file-granular pruning, which still rewrites a whole file to
+        drop one row). Falls back (returns False) when the combined
+        vector would exceed DV_MAX_KEYS — the rewrite paths then purge
+        physically. No-op deletes (no live key matched) return True
+        without a commit, like the partitioned path.
 
-        ``current`` is the DV-FILTERED snapshot, so re-deleting an
+        The match scan is DV-FILTERED, so re-deleting an
         already-tombstoned key never bloats the vector, and the CDF
         change rows (key-level, NULL payload — same contract as every
         delete path) fire only for genuinely live rows. The matched
-        key set is PINNED once (capped at DV_MAX_KEYS+1 rows before
-        materialization) and every downstream consumer — the size
-        check, the vector union, the CDF rows — derives from the
-        pinned blocks: a 2-key delete on a billion-row table pays ONE
-        current-table key scan, not four.
+        entries are collected driver-side, capped at DV_MAX_KEYS+1; on
+        a CDF-enabled table the change rows re-derive the same match
+        (the base version is immutable and ``keys`` pinned).
 
         PRECONDITION: ``keys`` must already be materialized (its only
         caller, :meth:`delete_keys`, eagerly localCheckpoints the key
-        frame before dispatching here). This method consults ``keys``
-        from three independent actions — the ``_prunable_key_files``
-        pre-check and distinct-collect, then the match semi join — so
-        a lazy, expensive keys plan would re-run its upstream lineage
-        three times (round-11 advice). With the pin those are three
-        cheap scans of checkpointed blocks."""
+        frame before dispatching here): the ``_prunable_key_files``
+        probe and the match semi join both consult it."""
         from a2b_spark.storage import stats as _stats
         from a2b_spark.storage.diff import null_safe_key_cond
 
-        # pin the matched rows (capped before materialization): vector
-        # keys, the size check, and the CDF rows all derive from the
-        # pinned blocks. FULL rows are pinned only when CDF pre-images
-        # need the payloads — otherwise the scan projects the KEY
-        # COLUMNS alone, so on a wide table the whole delete reads a
-        # few key columns' pages, not the table (the difference
-        # between "metadata-sized" and "one full-width scan")
+        # the match reads FULL rows only when CDF pre-images need the
+        # payloads — otherwise the scan projects the file identity and
+        # the KEY COLUMNS alone, so on a wide table the whole delete
+        # reads a few key columns' pages, not the table. STATS-SCOPED
+        # scan: the ``_STATS`` key-band pruning merge uses picks the
+        # files that can physically hold the deleted keys (O(touched
+        # files) on a key-clustered or many-partition table); no
+        # sidecar or unprunable keys → every file.
         need_payload = self.cdf_enabled(base) and self.cdf_preimages(base)
-        # STATS-SCOPED scan (round-11): the same ``_STATS`` key-band
-        # pruning merge uses picks the files that can physically hold
-        # the deleted keys — on a many-partition table the match scan
-        # then reads O(touched files), not O(table), which is what
-        # lets the vector path beat a partition rewrite at high
-        # partition counts (the SCALE_TRAJECTORY dv_partitioned
-        # probe). ``_read_files`` applies the live vector, preserving
-        # the "current is DV-filtered" invariant the no-bloat and
-        # CDF-only-live contracts below rely on. Fallback: no sidecar
-        # or unprunable keys → the full DV-filtered read, as before.
-        pruned = self._prunable_key_files(keys, base, pinned_distinct=True)
+        vdir = os.path.join(self.path, base)
+        keep_rels = _stats._data_files(vdir)
+        pruned = (
+            self._prunable_key_files(keys, base, pinned_distinct=True)
+            if self._stats_may_isolate(vdir)
+            else None
+        )
         if pruned is not None:
             kept_abs, _, schema = pruned
-            scan = self._read_files(spark, base, kept_abs, schema)
         else:
-            scan = current
-        pin_src = scan if need_payload else scan.select(*self.key_cols)
-        matched = (
-            pin_src.alias("c")
-            .join(
-                keys.alias("k"),
-                null_safe_key_cond(self.key_cols, "c", "k"),
-                "left_semi",
-            )
-            .limit(DV_MAX_KEYS + 1)
-            .localCheckpoint(eager=True)
+            kept_abs = [os.path.join(vdir, r) for r in keep_rels]
+            schema = self._version_schema(base)
+        if not kept_abs:
+            return True  # no data file can hold a key: nothing to delete
+        # the stats-scoped physical scan, then the vector (file column kept)
+        scan = self._apply_dv(
+            spark, self._read_files(spark, base, kept_abs, schema), vdir,
+            keep_file=True,
         )
-        deleted = matched.select(*self.key_cols).distinct()
-        # ONE aggregation answers both sizes over the pinned blocks
-        # (matched-row count for the cap check, distinct-key count for
-        # the vector budget) — groupBy keeps NULL key groups, so the
-        # distinct count is NULL-safe like the distinct() it replaces
-        sizes = (
-            matched.groupBy(*self.key_cols)
-            .agg(F.count(F.lit(1)).alias("__c"))
-            .agg(
-                F.count(F.lit(1)).alias("n_new"),
-                F.sum("__c").alias("n_matched"),
-            )
-            .first()
+        src = scan if need_payload else scan.select(DV_FILE, *self.key_cols)
+        matched = src.alias("c").join(
+            keys.alias("k"),
+            null_safe_key_cond(self.key_cols, "c", "k"),
+            "left_semi",
         )
-        n_new = sizes["n_new"]
-        if n_new == 0:
+        entries = (
+            matched.select(DV_FILE, *self.key_cols).limit(DV_MAX_KEYS + 1).toArrow()
+        )
+        if entries.num_rows == 0:
             return True  # nothing live matched: no commit
-        if sizes["n_matched"] > DV_MAX_KEYS:
-            return False  # cap hit before the limit: set size unknown
-        old_dv = self._dv_df(spark, base)
-        # footer-metadata count: no Spark job for the existing vector
-        n_old = self._dv_count(base) if old_dv is not None else 0
-        if n_old + n_new > DV_MAX_KEYS:
+        carried = sum(self._dv_file_counts(vdir).values())
+        if entries.num_rows + carried > DV_MAX_KEYS:
             return False  # vector would outgrow its broadcast budget
-        # disjoint by construction (current is DV-filtered), so a
-        # plain union IS the new distinct vector
-        dv_new = (
-            old_dv.unionByName(deleted) if old_dv is not None else deleted
-        )
         cdf = None
         if self.cdf_enabled(base):
             reserved = {"change", "_commit_version"} & set(current.columns)
@@ -2011,14 +2128,13 @@ class VersionedParquetTable:
                     "enabling CDF"
                 )
             if self.cdf_preimages(base):
-                cdf = matched.withColumn("change", F.lit("delete"))
+                cdf = matched.drop(DV_FILE).withColumn("change", F.lit("delete"))
             else:
-                # key-level NULL-payload delete rows straight from the
-                # pinned set — no second semi join over the table
+                # key-level NULL-payload delete rows from the same match
                 payload = [
                     c for c in current.columns if c not in set(self.key_cols)
                 ]
-                cdf = deleted.select(
+                cdf = matched.select(*self.key_cols).distinct().select(
                     *self.key_cols,
                     *[
                         F.lit(None).cast(current.schema[c].dataType).alias(c)
@@ -2026,124 +2142,84 @@ class VersionedParquetTable:
                     ],
                     F.lit("delete").alias("change"),
                 )
-        vdir = os.path.join(self.path, base)
-        keep_rels = _stats._data_files(vdir)
         self._commit_linked_files(
             None,  # no new rows: hardlinks + vector only
             keep_rels,
             op="delete",
             base=base,
             cdf_df=cdf,
-            # n_new > 0 above: the union vector is non-empty by
-            # construction — skip the isEmpty probe action
-            dv_df=dv_new,
-            dv_state="nonempty",
+            dv_new=entries,
         )
         return True
 
     def purge_deleted(self, spark: SparkSession) -> dict:
         """Physically remove the deletion vector's tombstoned rows —
         the DV maintenance op (Delta's REORG TABLE ... APPLY (PURGE)):
-        rewrite ONLY the files whose ``_STATS`` key band can hold a
-        tombstoned key (DV-filtered read, like any pruned rewrite) —
-        or, on a PARTITIONED table, only the partitions that
-        physically hold tombstoned rows — hardlink everything else,
-        and clear the vector. A layout-only commit: row content is
-        identical before and after (CDF consumers skip it), but the
-        table stops paying the per-read anti join and vacuum can
-        eventually reclaim the tombstoned bytes. Falls back to
-        rewriting all files when the sidecar cannot band-match (no
-        stats / unprunable key type). Returns {"files_rewritten",
-        "files_linked", "purged_keys"}."""
+        rewrite ONLY the data files the vector names (DV-filtered
+        read) — or, on a PARTITIONED table, the partitions holding
+        them — hardlink everything else, and clear the vector. A
+        layout-only commit: row content is identical before and after
+        (CDF consumers skip it), but the table stops paying the
+        per-read anti join and vacuum can eventually reclaim the
+        tombstoned bytes. Returns {"files_rewritten", "files_linked",
+        "purged_keys"}."""
         base = self.current_version()
         out = {"files_rewritten": 0, "files_linked": 0, "purged_keys": 0}
         if base is None:
             return out
-        dv = self._dv_df(spark, base)
-        if dv is None:
+        vdir = os.path.join(self.path, base)
+        named = self._dv_file_counts(vdir)
+        if not named:
             return out
         from a2b_spark.storage import stats as _stats
 
-        n_keys = self._dv_count(base)  # footer metadata: no Spark job
-        vdir = os.path.join(self.path, base)
+        n_keys = sum(named.values())
         all_rels = _stats._data_files(vdir)
         if self.partition_by:
-            # PARTITION-granular purge: locate the partitions that
-            # physically hold tombstoned rows on the UNFILTERED read
-            # (the filtered read cannot see them), rewrite exactly
-            # those DV-filtered, hardlink the rest, clear the vector.
+            # PARTITION-granular purge: rewrite the partitions holding
+            # a named file DV-filtered, hardlink the rest. The vector
+            # clears because its entries name only rewritten files.
             # _commit_linked_files is layout-unsafe here — its writer
             # would stage root-level files into a hive-partitioned dir.
-            from a2b_spark.storage.diff import null_safe_key_cond
-
-            raw = self._read_nodv(spark, base)
-            touched = self._touched_partitions(
-                raw.alias("r")
-                .join(
-                    F.broadcast(dv.alias("d")),
-                    null_safe_key_cond(self.key_cols, "r", "d"),
-                    "left_semi",
+            ids = self._file_ids(vdir)
+            touched, n_linked = set(), 0
+            for leaf, values in _leaf_partitions(vdir, len(self.partition_by)):
+                rels = [
+                    os.path.relpath(os.path.join(leaf, f), vdir)
+                    for f in os.listdir(leaf)
+                ]
+                if any(ids.get(r) in named for r in rels):
+                    touched.add(values)
+                else:
+                    n_linked += sum(r in ids for r in rels)
+            if touched:
+                scoped = self.read(spark, version=base).filter(
+                    self._partition_filter(touched)
                 )
-                .select(*self.partition_by)
-            )
-            if not touched:
-                # vector keys with no physical rows left (all their
-                # partitions were rewritten since): clear the vector
-                # with an all-hardlink commit (no writer involved)
-                self._commit_linked_files(
-                    None, all_rels, op="purge", base=base,
-                    dv_df=dv.limit(0), dv_state="empty",
-                )
-                return {
-                    "files_rewritten": 0,
-                    "files_linked": len(all_rels),
-                    "purged_keys": n_keys,
-                }
-            scoped = self.read(spark, version=base).filter(
-                self._partition_filter(touched)
-            )
-            untouched_leaves = [
-                os.path.relpath(leaf, vdir)
-                for leaf, values in _leaf_partitions(
-                    vdir, len(self.partition_by)
-                )
-                if values not in touched
-            ]
-            n_linked = sum(
-                1
-                for r in all_rels
-                if any(r.startswith(u + os.sep) for u in untouched_leaves)
-            )
-            self._commit_touched(
-                scoped, touched, op="purge", base=base,
-                dv_df=dv.limit(0), dv_state="empty",
-            )
+                self._commit_touched(scoped, touched, op="purge", base=base)
+            else:
+                # vector entries with no physical file left: clear the
+                # vector with an all-hardlink commit
+                self._commit_linked_files(None, all_rels, op="purge", base=base)
             return {
                 "files_rewritten": len(all_rels) - n_linked,
                 "files_linked": n_linked,
                 "purged_keys": n_keys,
             }
-        info = self._prunable_key_files(dv, base, pinned_distinct=True)
-        if info is not None:
-            kept_abs, keep_rels, schema = info
-        else:
-            # band-matching unavailable: every file may hold a
-            # tombstoned row — rewrite them all (a plain compact-sized
-            # cost, still clearing the vector)
-            kept_abs = [os.path.join(vdir, r) for r in all_rels]
-            keep_rels = []
-            schema = self._version_schema(base)
-        rewritten = self._read_files(spark, base, kept_abs, schema)  # DV-filtered
+        ids = self._file_ids(vdir)
+        rewrite = [r for r in all_rels if ids.get(r) in named]
+        keep_rels = [r for r in all_rels if ids.get(r) not in named]
         self._commit_linked_files(
-            rewritten if kept_abs else None,
+            self._scan_files(
+                spark, base, [os.path.join(vdir, r) for r in rewrite],
+                self._version_schema(base),
+            ) if rewrite else None,
             keep_rels,
             op="purge",
             base=base,
-            dv_df=dv.limit(0),  # explicit clear, never carry
-            dv_state="empty",
         )
         return {
-            "files_rewritten": len(kept_abs),
+            "files_rewritten": len(rewrite),
             "files_linked": len(keep_rels),
             "purged_keys": n_keys,
         }
@@ -2230,18 +2306,11 @@ class VersionedParquetTable:
         keep_rels = [rel for rel in all_rels if rel not in kept_rels]
         return kept_abs, keep_rels, self._version_schema(base)
 
-    def _read_files(
-        self, spark: SparkSession, base: str, abs_paths, schema,
-        dv: Optional[DataFrame] = _UNSET_BASE,
-    ):
-        """Read exactly ``abs_paths`` of version ``base`` under the
-        sidecar schema (empty typed frame when no file matched — a
-        pure-insert batch). The version's deletion vector applies here
-        too: these reads feed REWRITES (pruned merge/delete), and an
-        unfiltered read would physically resurrect tombstoned rows
-        into the new files. ``dv`` forwards to :meth:`_apply_dv` —
-        callers that already loaded the vector skip the second read."""
-        vdir = os.path.join(self.path, base)
+    def _read_files(self, spark: SparkSession, base: str, abs_paths, schema):
+        """Scan exactly ``abs_paths`` of version ``base`` under the
+        sidecar schema — PHYSICAL rows, the deletion vector not yet
+        applied (see :meth:`_scan_files`) — or an empty typed frame
+        when no file matched (a pure-insert batch)."""
         if not abs_paths:
             if schema is None:
                 schema = self.read(spark, version=base).schema
@@ -2249,11 +2318,57 @@ class VersionedParquetTable:
         reader = (
             spark.read.format(self.fmt)
             .options(**_FORMAT_OPTIONS[self.fmt])
-            .option("basePath", vdir)
+            .option("basePath", os.path.join(self.path, base))
         )
         if schema is not None:
             reader = reader.schema(schema)
-        return self._apply_dv(spark, reader.load(abs_paths), vdir, dv=dv)
+        return reader.load(abs_paths)
+
+    def _scan_files(
+        self, spark: SparkSession, base: str, abs_paths, schema,
+        keep_file: bool = False,
+    ) -> DataFrame:
+        """:meth:`_read_files` with the version's deletion vector
+        applied: these scans feed REWRITES (pruned merge/delete/purge)
+        and vector maintenance, and an unfiltered read would physically
+        resurrect tombstoned rows into new files. ``keep_file`` keeps
+        the ``DV_FILE`` identity column (see :meth:`_apply_dv`)."""
+        df = self._read_files(spark, base, abs_paths, schema)
+        if not abs_paths:
+            return (
+                df.withColumn(DV_FILE, F.lit(None).cast("string"))
+                if keep_file
+                else df
+            )
+        return self._apply_dv(
+            spark, df, os.path.join(self.path, base), keep_file=keep_file
+        )
+
+    def _stats_may_isolate(self, vdir: str) -> bool:
+        """True when the ``_STATS`` bands of the first key column are
+        pairwise disjoint across the version's files (files without
+        usable stats aside) — a key-clustered layout, where the
+        stats-scoped merge/delete planning can skip files. False for a
+        hashed or hash-partitioned layout, where every band spans the
+        key range, and when there is no usable sidecar: the planning
+        probe's collect job is then skipped. Driver-side, no job."""
+        from a2b_spark.storage import stats as _stats
+
+        tbl = _stats.load_stats_arrow(vdir)
+        spec = (
+            None if tbl is None
+            else _stats._stat_col_specs(tbl.schema.names).get(self.key_cols[0])
+        )
+        if spec is None:
+            return False
+        bands = sorted(
+            (mn, mx)
+            for mn, mx in zip(
+                tbl.column(spec["min"]).to_pylist(), tbl.column(spec["max"]).to_pylist()
+            )
+            if mn is not None and mx is not None
+        )
+        return all(a[1] < b[0] for a, b in zip(bands, bands[1:]))
 
     @staticmethod
     def _files_matching_keys(vdir: str, key: str, keys_sorted: list):
@@ -2295,23 +2410,21 @@ class VersionedParquetTable:
         op: str,
         base: str,
         cdf_df: Optional[DataFrame] = None,
-        dv_df: Optional[DataFrame] = None,
-        dv_state: Optional[str] = None,
+        dv_new=None,
     ) -> None:
-        """File-granular sibling of :meth:`_commit_touched` for
-        UNPARTITIONED tables: write ``df`` as this commit's new files
-        and hard-link every ``keep_rels`` data file from ``base``
-        (metadata-only). Constraint observation rides the staging
-        write; stats entries for linked files reuse the base sidecar
-        by inode. ``dv_df``: this commit's deletion vector — None
-        CARRIES the base's vector unchanged (the hardlinked files
-        still hold the tombstoned bytes); a DataFrame REPLACES it
-        (written when non-empty, cleared when empty). ``df=None``: a
-        NO-NEW-ROWS commit (a deletion-vector delete) — every data
-        file hardlinks, nothing is staged through Spark (whose writer
-        emits a schema-preserving empty part file even for an empty
-        frame), constraints trivially hold, and the schema sidecar
-        carries forward from the base."""
+        """File-granular sibling of :meth:`_commit_touched`, THE commit
+        of "linked files + new files + vector": write ``df`` as this
+        commit's new files and hard-link every ``keep_rels`` data file
+        from ``base`` (metadata-only). Constraint observation rides the
+        staging write; stats entries for linked files reuse the base
+        sidecar by inode. The base's deletion vector carries (minus the
+        entries of files not linked); ``dv_new`` (a pyarrow table of
+        ``(DV_FILE, *key_cols)`` entries) adds this commit's
+        tombstones. ``df=None``: a NO-NEW-ROWS commit (a
+        deletion-vector delete) — nothing is staged through Spark
+        (whose writer emits a schema-preserving empty part file even
+        for an empty frame), constraints trivially hold, and the schema
+        sidecar carries forward from the base."""
         old_dir = os.path.join(self.path, base)
         version = self._next_version()
         tmp_target = os.path.join(self.path, f".tmp-{uuid.uuid4().hex}")
@@ -2350,34 +2463,47 @@ class VersionedParquetTable:
                 f.write(content)
         self._write_stats_sidecar(tmp_target, base)
         self._carry_forward_metadata(tmp_target, base)
-        self._stage_dv(tmp_target, base, dv_df, dv_state=dv_state)
+        self._stage_dv(tmp_target, old_dir, dv_new)
         self._claim_version_dir(tmp_target, version)
         self._commit(version, base=base)
 
-    def _stage_dv(
-        self,
-        tmp_target: str,
-        base: Optional[str],
-        dv_df: Optional[DataFrame],
-        dv_state: Optional[str] = None,
-    ) -> None:
-        """Stage this commit's deletion vector: ``dv_df=None`` carries
-        the base version's ``_dv/`` (small file copy); a DataFrame
-        replaces it — written as one parquet file when non-empty,
-        nothing (vector cleared) when empty. ``dv_state``: caller's
-        knowledge of the frame's emptiness ('empty' / 'nonempty') —
-        skips the ``isEmpty`` probe action; None runs the probe."""
+    def _stage_dv(self, tmp_target: str, src_vdir: Optional[str], dv_new=None) -> None:
+        """Stage the staged version's deletion vector AFTER its data
+        files are in place: every delta of ``src_vdir`` whose entries
+        all name a data file of the new version is HARDLINKED, a delta
+        with some dead entries is rewritten without them, a wholly dead
+        one is dropped; ``dv_new`` (pyarrow entries) becomes one new
+        delta, also without dead entries. Driver-side pyarrow only —
+        the vector is capped at DV_MAX_KEYS entries."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        deltas = self._dv_deltas(src_vdir) if src_vdir else []
+        if not deltas and (dv_new is None or not dv_new.num_rows):
+            return
+        live = pa.array(sorted(set(self._file_ids(tmp_target).values())), pa.string())
         dst = os.path.join(tmp_target, DV_DIR)
-        if dv_df is None:
-            src = os.path.join(self.path, base or "", DV_DIR)
-            if base and os.path.isdir(src):
-                shutil.copytree(src, dst)
-            return
-        if dv_state == "empty":
-            return
-        if dv_state != "nonempty" and dv_df.isEmpty():
-            return
-        dv_df.coalesce(1).write.parquet(dst)
+
+        def put(tbl, src: Optional[str] = None) -> None:
+            mask = pc.is_in(tbl.column(DV_FILE), value_set=live)
+            n = pc.sum(mask).as_py() or 0
+            if not n:
+                return
+            os.makedirs(dst, exist_ok=True)
+            if src is not None and n == tbl.num_rows:
+                os.link(src, os.path.join(dst, os.path.basename(src)))
+            else:
+                pq.write_table(
+                    tbl.filter(mask),
+                    os.path.join(dst, f"dv-{uuid.uuid4().hex}.parquet"),
+                )
+
+        for src in deltas:
+            put(pq.read_table(src), src)
+        if dv_new is not None and dv_new.num_rows:
+            put(dv_new)
+
     def compact(
         self,
         spark: SparkSession,

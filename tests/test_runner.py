@@ -325,3 +325,46 @@ def test_maker_rejects_invalid_inputs(tmp_path):
         make_migration(str(tmp_path), "m3", "s", "d", source_ids=(("id", "uuid"),))
     with _p.raises(ValueError, match="identifier"):
         make_migration(str(tmp_path), "bad-name", "s", "d")
+
+
+def _customer_registry(spark, tmp_path, sf_dir, n=15):
+    src = spark.read.parquet(f"{sf_dir}/customer.parquet").limit(n).localCheckpoint()
+    reg = MigrationRegistry()
+    reg.register(
+        Migration(
+            name="rerun_mig",
+            source=DataFrameSource(src),
+            destination=ParquetDestination(str(tmp_path / "d"), key_cols=("id",)),
+            source_ids=(IdField("c_custkey", "int"),),
+            destination_ids=(IdField("id", "int"),),
+            transform=lambda df: df.select("__src__", "__dest_id", "c_custkey", "c_name"),
+        )
+    )
+    return reg, MappingStore(spark, str(tmp_path / "maps"))
+
+
+def test_rerun_spark_metrics_are_per_run(spark, tmp_path, sf_dir):
+    """Each run has its own job group: a re-run's job count covers only
+    the jobs launched during that run, not the earlier runs' jobs."""
+    reg, mapper = _customer_registry(spark, tmp_path, sf_dir)
+    jsc = spark.sparkContext._jsc.sc()
+    run_pipeline(spark, reg, mapper, progress=lambda *a: None)
+    before = int(jsc.dagScheduler().nextJobId())
+    r2 = run_pipeline(spark, reg, mapper, progress=lambda *a: None)["rerun_mig"]
+    launched = int(jsc.dagScheduler().nextJobId()) - before
+    assert 1 <= r2.spark_metrics["jobs"] <= launched
+
+
+def test_run_pipeline_incremental_skips_unchanged(spark, tmp_path, sf_dir):
+    """``incremental`` reaches run_migration through run_pipeline: an
+    unchanged re-run writes nothing and leaves the destination version
+    where it was."""
+    reg, mapper = _customer_registry(spark, tmp_path, sf_dir)
+    r1 = run_pipeline(spark, reg, mapper, incremental=True, progress=lambda *a: None)
+    assert r1["rerun_mig"].rows_written == 15
+    table = reg.get("rerun_mig").destination.table
+    v1 = table.current_version()
+    r2 = run_pipeline(spark, reg, mapper, incremental=True, progress=lambda *a: None)
+    assert r2["rerun_mig"].rows_written == 0
+    assert r2["rerun_mig"].rows_unchanged == 15
+    assert table.current_version() == v1
