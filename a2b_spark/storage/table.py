@@ -2099,11 +2099,7 @@ class VersionedParquetTable:
             schema = self._version_schema(base)
         if not kept_abs:
             return True  # no data file can hold a key: nothing to delete
-        # the stats-scoped physical scan, then the vector (file column kept)
-        scan = self._apply_dv(
-            spark, self._read_files(spark, base, kept_abs, schema), vdir,
-            keep_file=True,
-        )
+        scan = self._scan_files(spark, base, kept_abs, schema, keep_file=True)
         src = scan if need_payload else scan.select(DV_FILE, *self.key_cols)
         matched = src.alias("c").join(
             keys.alias("k"),
