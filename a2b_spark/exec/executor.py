@@ -10,23 +10,30 @@ Spark dataflow (SURVEY §3.2): the whole loop is
 
     source
       → cast ids (C2)
-      → left-join mapping table (C3)
+      → left-join mapping table (C3): dest ids + stored row hash
       → left-join destination snapshot → ``__existing`` struct (C4)
       → transform (C1; filter = skip)
       → assign deterministic dest ids
+      → persist the entity; ONE aggregate materializes it and counts
+        (rows processed, rows changed)
       → MERGE into destination (C5) + MERGE into mapping table
       → anti-join for orphans (C6) + policy (C7)
 
 Per-row becomes per-partition; the joins shuffle on the key columns
 (or broadcast when one side is small — AQE decides at runtime); no
-data ever round-trips through the driver.
+data ever round-trips through the driver. A never-run migration's
+mapping table is planner-visibly empty, so its join is planned away.
 
 Transform contract (mirrors DataMigrationInterface::transform):
 - receives the prepared DataFrame: source columns, ``__src__`` struct
-  (the cast source-id tuple — DO NOT drop it), ``__existing`` struct
-  (previously-migrated destination entity, null on first sight), and
-  ``__dest_<id>`` precomputed destination ids (existing mapping if
-  present, else a deterministic hash of the source key).
+  (the cast source-id tuple plus, once the mapping table stores
+  hashes, the hidden ``__prev_hash`` field — the incremental skip's
+  stored content hash; keep the struct as-is, DO NOT drop or rebuild
+  it: a rebuilt struct loses the hash and every row counts as
+  changed), ``__existing`` struct (previously-migrated destination
+  entity, null on first sight), and ``__dest_<id>`` precomputed
+  destination ids (existing mapping if present, else a deterministic
+  hash of the source key).
 - returns the entity DataFrame. Dropping rows (``.filter``) = the
   reference's "return null to skip". Updating-in-place = coalescing
   against ``__existing.<col>``.
@@ -55,6 +62,7 @@ from a2b_spark.mapping.store import (
 SRC_STRUCT = "__src__"
 EXISTING = "__existing"
 ROW_HASH = "__row_hash"
+PREV_HASH = "__prev_hash"  # hidden __src__ field: the stored row_hash
 
 
 def _with_row_hash(entity: DataFrame) -> DataFrame:
@@ -75,45 +83,17 @@ def _with_row_hash(entity: DataFrame) -> DataFrame:
     )
 
 
-def _changed_rows(mapper: MappingStore, m: Migration, entity: DataFrame) -> DataFrame:
-    """Incremental filter: keep entity rows whose content hash differs
-    from the one stored in the mapping table (or that have no mapping
-    yet — new rows and pre-round stubs both qualify). One left join on
-    the source keys against a two-column projection of the mapping
-    table; O(entity + mapping-key scan), never a destination read.
-
-    This is deliberately a SECOND (thin) pass over the mapping table
-    after prepare()'s id join: carrying the hash through prepare would
-    leak a ``__prev_hash`` column into user transforms (the exact
-    pass-through-pollution bug the prepare() drop list guards
-    against). The extra cost is a column-pruned scan of
-    (source keys, row_hash) only — parquet never reads the rest."""
-    prev = mapper.load(m.mapping_key(), m.source_ids, m.destination_ids)
-    key_cols = [prev[src_col(f)] for f in m.source_ids]
-    if "row_hash" in prev.columns:
-        prev_h = prev.select(*key_cols, prev["row_hash"].alias("__prev_hash"))
-    else:
-        # mapping table written before incremental mode existed: no
-        # stored hashes, so everything counts as changed ONCE and the
-        # hashes backfill on this run's mapping merge
-        prev_h = prev.select(*key_cols).withColumn(
-            "__prev_hash", F.lit(None).cast("long")
-        )
-    # orphan-preserve rows carry all-NULL source ids — not addressable
-    # by source key (same exclusion as dest_ids_for)
-    not_all_null = None
-    for f in m.source_ids:
-        c = prev_h[src_col(f)].isNotNull()
-        not_all_null = c if not_all_null is None else (not_all_null | c)
-    prev_h = prev_h.filter(not_all_null)
-    cond = None
-    for f in m.source_ids:
-        c = entity[f"{SRC_STRUCT}.{f.name}"].eqNullSafe(prev_h[src_col(f)])
-        cond = c if cond is None else (cond & c)
-    joined = entity.join(prev_h, on=cond, how="left")
-    return joined.filter(
-        F.col("__prev_hash").isNull() | (F.col("__prev_hash") != F.col(ROW_HASH))
-    ).drop(F.col("__prev_hash"), *[prev_h[src_col(f)] for f in m.source_ids])
+def _changed(entity: DataFrame) -> F.Column:
+    """Incremental filter over the hashed entity: the row's content hash
+    differs from the stored one riding in ``__src__``, or none is stored
+    (new rows, stubs, hashes a prune or non-incremental run nulled).
+    A pre-incremental mapping table, or a transform that rebuilt
+    ``__src__``, carries no field: every row counts as changed once and
+    the hashes backfill on this run's mapping merge."""
+    if PREV_HASH not in entity.schema[SRC_STRUCT].dataType.fieldNames():
+        return F.lit(True)
+    prev = F.col(f"{SRC_STRUCT}.{PREV_HASH}")
+    return prev.isNull() | (prev != F.col(ROW_HASH))
 
 
 def _pruned_mappings(
@@ -194,6 +174,13 @@ def prepare(
         c = src[f.name].eqNullSafe(map_df[src_col(f)])
         cond = c if cond is None else (cond & c)
     joined = src.join(map_df, on=cond, how="left")
+    if "row_hash" in map_df.columns:
+        # the stored hash rides inside __src__, the one column every
+        # transform keeps, so the incremental skip needs no second
+        # mapping read (see _changed)
+        joined = joined.withColumn(
+            SRC_STRUCT, F.col(SRC_STRUCT).withField(PREV_HASH, map_df["row_hash"])
+        )
 
     dest_names = [f.name for f in m.destination_ids]
     snap = m.destination.read_snapshot(spark)
@@ -237,10 +224,10 @@ def prepare(
         *[map_df[dest_col(f)] for f in m.destination_ids],
         map_df["updated"],
         map_df["status"],
-        # incremental mode's stored hash: without this drop a
+        # the stored hash as a top-level column: without this drop a
         # pass-through transform would carry the STALE hash into the
         # entity (polluting the destination schema and making
-        # _with_row_hash never match) — round-6 review
+        # _with_row_hash never match) — it lives on in __src__ only
         *([map_df["row_hash"]] if "row_hash" in map_df.columns else []),
     )
     return joined, snap, existing_ids
@@ -356,13 +343,16 @@ def run_migration(
     carries a content hash, the hash persists in the mapping table, and
     rows whose hash is unchanged since the last run SKIP the
     destination and mapping merges entirely (a 100 TB re-run where 1%
-    drifted writes 1%). Orphan detection still sees the full entity
-    set, so prune/preserve/report are unaffected. First run after
-    enabling (or over a pre-incremental mapping table) writes
-    everything once, backfilling hashes. ``rows_written`` counts rows
-    actually merged; content-identical rows are reported separately in
-    ``rows_unchanged`` (``rows_skipped`` stays rows_in − rows_written:
-    transform-filtered PLUS unchanged).
+    drifted writes 1%). The stored hash arrives with prepare()'s
+    mapping join inside ``__src__``, so the skip is a filter on the
+    persisted entity. Orphan detection still sees the full entity set,
+    so prune/preserve/report are unaffected. First run after enabling
+    (or over a pre-incremental mapping table, or with a transform that
+    rebuilt ``__src__``) writes everything once, backfilling hashes.
+    ``rows_written`` counts rows actually merged; content-identical
+    rows are reported separately in ``rows_unchanged``
+    (``rows_skipped`` stays rows_in − rows_written: transform-filtered
+    PLUS unchanged).
     """
     if orphan_policy not in {"keep", "prune", "preserve", "report"}:
         raise ValueError(f"unknown orphan policy {orphan_policy!r}")
@@ -389,24 +379,24 @@ def run_migration(
 
     entity = m.transform(prepared)
     entity = finalize_entity(entity, m)
+    changed = F.lit(True)
     if incremental:
         entity = _with_row_hash(entity)
+        changed = _changed(entity)
 
     # Cache: the entity feeds the destination merge, the mapping merge,
-    # and the orphan diff — three actions over one plan.
+    # and the orphan diff. One aggregate (rows, changed rows) is the
+    # cache's eager materialization, before any consumer reads it
+    # (persisted fan-out frames race their consumers under AQE).
     entity = entity.persist()
-    write_set = None
     try:
-        rows_processed = entity.count()
+        rows_processed, rows_written = entity.agg(
+            F.count(F.lit(1)), F.count_if(changed)
+        ).first()
         rows_in = int(obs.get["rows_in"]) if obs is not None else -1
 
         dest_names = [f.name for f in m.destination_ids]
-        if incremental:
-            write_set = _changed_rows(mapper, m, entity).persist()
-            rows_written = write_set.count()
-        else:
-            write_set = entity
-            rows_written = rows_processed
+        write_set = entity.filter(changed) if incremental else entity
 
         # orphans are diffed against the PRE-RUN snapshot, so they are
         # known before any commit. Pinned (lazily: the count is the
@@ -481,5 +471,3 @@ def run_migration(
         )
     finally:
         entity.unpersist()
-        if write_set is not None and write_set is not entity:
-            write_set.unpersist()

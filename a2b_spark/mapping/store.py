@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from a2b_spark.core.migration import IdField
-from a2b_spark.storage.table import VersionedParquetTable
+from a2b_spark.storage.table import VersionedParquetTable, empty_frame
 
 STATUS_MIGRATED = 0  # reference: DataMigrationMapper STATUS_MIGRATED
 STATUS_STUB = 1  # reference: DataMigrationMapper STATUS_STUB
@@ -90,11 +90,12 @@ class MappingStore:
         self, mapping_key: str, source_ids: Sequence[IdField], dest_ids: Sequence[IdField]
     ) -> DataFrame:
         """The mapping table as a DataFrame (empty with correct schema if
-        the migration has never run)."""
+        the migration has never run — planner-visibly empty, so a first
+        run's mapping join is removed at plan time)."""
         df = self.table(mapping_key, source_ids, dest_ids).read(self.spark)
         if df is not None:
             return df
-        return self.spark.createDataFrame([], self.schema(source_ids, dest_ids))
+        return empty_frame(self.spark, self.schema(source_ids, dest_ids))
 
     def merge(
         self,

@@ -167,6 +167,13 @@ def _stats_friendly_timestamps(spark: SparkSession):
             spark.conf.set(key, old)
 
 
+def empty_frame(spark: SparkSession, schema) -> DataFrame:
+    """A typed empty frame the optimizer can see is empty: ``limit(0)``
+    folds to an empty local relation, so a join against it is planned
+    away instead of shuffling an opaque empty RDD."""
+    return spark.createDataFrame([], schema).limit(0)
+
+
 class VersionedParquetTable:
     """Versioned keyed table; ``fmt`` selects the file format. Parquet
     is the scale path; csv/json exist for reference-parity sinks
@@ -359,7 +366,7 @@ class VersionedParquetTable:
             # readable only through its schema sidecar
             schema = self._version_schema(v)
             if schema is not None:
-                return spark.createDataFrame([], schema)
+                return empty_frame(spark, schema)
         reader = spark.read.format(self.fmt).options(**_FORMAT_OPTIONS[self.fmt])
         # The per-version sidecar is the AUTHORITATIVE schema of that
         # version — applied for every format, parquet included (the
@@ -1439,16 +1446,17 @@ class VersionedParquetTable:
         # (touched-partition collect, duplicate-key CDC guard, CDF
         # change-file write, the data write itself) — see merge() for
         # the non-deterministic-lineage divergence this prevents. On a
-        # partitioned table the pin job ALSO answers which partitions
-        # the batch touches (observation riding the checkpoint pass).
+        # partitioned table the pin's materializing collect also
+        # answers which partitions the batch touches (see
+        # _pin_with_touched).
         touched_pre: Optional[set] = None
         if self.partition_by and not dedupe_keys:
             batch, touched_pre = self._pin_with_touched(batch)
         elif self.partition_by or self.cdf_enabled(base):
             # with dedupe_keys the touched set must be recomputed on the
             # POST-anti-join batch anyway (a partition whose rows all
-            # dedupe away must hardlink, not rewrite), so the
-            # observation would be wasted — plain pin
+            # dedupe away must hardlink, not rewrite), so collecting it
+            # with the pin would be wasted — plain pin
             batch = batch.localCheckpoint(eager=True)
         current = self.read(batch.sparkSession, version=base)
         if dedupe_keys:
@@ -1485,7 +1493,7 @@ class VersionedParquetTable:
                         )
                 elif self.partitions_derived_from_keys:
                     # dedupe_keys is None in this branch, so the pin's
-                    # observation already answered the touched set
+                    # collect already answered the touched set
                     touched = (
                         touched_pre
                         if touched_pre is not None
@@ -1847,8 +1855,8 @@ class VersionedParquetTable:
         from a2b_spark.storage.diff import null_safe_key_cond
 
         # merge() passes the batch's touched set when its pin job
-        # already answered it (observation fold); recompute only when
-        # called without one
+        # already answered it (see _pin_with_touched); recompute only
+        # when called without one
         if touched is None:
             touched = self._touched_partitions(batch)
         if not self.partitions_derived_from_keys:
@@ -2310,7 +2318,7 @@ class VersionedParquetTable:
         if not abs_paths:
             if schema is None:
                 schema = self.read(spark, version=base).schema
-            return spark.createDataFrame([], schema)
+            return empty_frame(spark, schema)
         reader = (
             spark.read.format(self.fmt)
             .options(**_FORMAT_OPTIONS[self.fmt])

@@ -6,6 +6,8 @@ and a re-run with k changed rows merges exactly those k — while orphan
 detection still sees the full entity set.
 """
 
+import dataclasses
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -175,3 +177,32 @@ def test_non_incremental_rewrite_invalidates_hash(spark, tmp_path):
     r3 = run_migration(spark, mk("A"), mapper, incremental=True)
     assert r3.rows_written == 1
     assert mk("A").destination.read_snapshot(spark).first().v == "A"
+
+
+def test_rebuilt_src_struct_rewrites_once_then_skips(spark, base):
+    """A transform that rebuilds ``__src__`` from the id columns drops
+    the stored hash riding in it: that run treats every row as changed,
+    writes it once and backfills the hashes; the next unchanged run
+    with a struct-keeping transform writes nothing, and the hidden
+    field never reaches the destination."""
+    src, mapper, dest = base
+
+    def rebuilt(df):
+        return df.select(
+            F.struct("c_custkey").alias("__src__"),
+            "__dest_id", "c_custkey", "c_name", "c_acctbal",
+        )
+
+    assert run_migration(spark, _mig(src, dest), mapper, incremental=True).rows_written == 20
+    r = run_migration(
+        spark, dataclasses.replace(_mig(src, dest), transform=rebuilt), mapper,
+        incremental=True,
+    )
+    assert (r.rows_written, r.rows_unchanged) == (20, 0)
+    m = _mig(src, dest)
+    hashes = mapper.load(m.mapping_key(), m.source_ids, m.destination_ids)
+    assert hashes.filter(F.col("row_hash").isNull()).count() == 0
+    r = run_migration(spark, _mig(src, dest), mapper, incremental=True)
+    assert (r.rows_written, r.rows_unchanged) == (0, 20)
+    cols = m.destination.read_snapshot(spark).columns
+    assert not {"__prev_hash", "row_hash", "__src__"} & set(cols), cols

@@ -368,3 +368,28 @@ def test_run_pipeline_incremental_skips_unchanged(spark, tmp_path, sf_dir):
     assert r2["rerun_mig"].rows_written == 0
     assert r2["rerun_mig"].rows_unchanged == 15
     assert table.current_version() == v1
+
+
+# Spark jobs per run measured on the 15-row migration below (fresh
+# load, then an incremental re-run with no drift); the budget allows
+# 2 more, so an added action, or a shuffle brought back onto a
+# never-run migration's empty mapping table, fails here
+FRESH_RUN_JOBS = 4
+UNCHANGED_RERUN_JOBS = 7
+JOB_HEADROOM = 2
+
+
+def test_job_budget_fresh_and_unchanged_rerun(spark, tmp_path, sf_dir):
+    """A run's Spark jobs stay within the measured budget: one
+    materialization of the entity, no join against an empty mapping
+    table, no second mapping read for the incremental skip."""
+    reg, mapper = _customer_registry(spark, tmp_path, sf_dir)
+    runs = [
+        run_pipeline(spark, reg, mapper, incremental=True, progress=lambda *a: None)[
+            "rerun_mig"
+        ]
+        for _ in range(2)
+    ]
+    assert [r.rows_written for r in runs] == [15, 0]
+    assert runs[0].spark_metrics["jobs"] <= FRESH_RUN_JOBS + JOB_HEADROOM
+    assert runs[1].spark_metrics["jobs"] <= UNCHANGED_RERUN_JOBS + JOB_HEADROOM

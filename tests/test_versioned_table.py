@@ -1004,3 +1004,20 @@ def test_vacuum_older_than_never_punches_holes(spark, tmp_path):
     assert t.versions() == vs[1:]
     nums = [int(v.split("_")[1]) for v in t.versions()]
     assert nums == list(range(nums[0], nums[0] + len(nums)))  # contiguous
+
+
+def test_fully_deleted_read_plans_joins_away(spark, tmp_path):
+    """A fully deleted (partitioned: Spark writes no file for an empty
+    frame) version reads as a planner-visible empty frame: a join
+    against it is removed at plan time, not shuffled."""
+    t = VersionedParquetTable(str(tmp_path / "t"), key_cols=("id",), partition_by=("p",))
+    rows = [(i, f"p{i % 2}", f"v{i}") for i in range(6)]
+    t.overwrite(spark.createDataFrame(rows, "id int, p string, v string"))
+    t.delete_keys(spark.createDataFrame([(i,) for i in range(6)], "id int"))
+    gone = t.read(spark)
+    assert gone.count() == 0
+    src = spark.range(10).select(F.col("id").cast("int").alias("id"))
+    joined = src.join(gone, on="id", how="left")
+    plan = joined._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan and "Join" not in plan, plan
+    assert joined.filter(F.col("v").isNotNull()).count() == 0
