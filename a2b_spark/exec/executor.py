@@ -11,13 +11,16 @@ Spark dataflow (SURVEY §3.2): the whole loop is
     source
       → cast ids (C2)
       → left-join mapping table (C3): dest ids + stored row hash
-      → left-join destination snapshot → ``__existing`` struct (C4)
+      → left-join destination snapshot → ``__existing`` struct (C4);
+        the stored hash counts only where the snapshot holds the row
       → transform (C1; filter = skip)
       → assign deterministic dest ids
       → persist the entity; ONE aggregate materializes it and counts
         (rows processed, rows changed)
-      → MERGE into destination (C5) + MERGE into mapping table
-      → anti-join for orphans (C6) + policy (C7)
+      → anti-join for orphans (C6) against the pre-run snapshot
+      → MERGE into destination (C5), carrying a prune's deletes (C7):
+        one destination commit
+      → MERGE into mapping table
 
 Per-row becomes per-partition; the joins shuffle on the key columns
 (or broadcast when one side is small — AQE decides at runtime); no
@@ -85,40 +88,17 @@ def _with_row_hash(entity: DataFrame) -> DataFrame:
 
 def _changed(entity: DataFrame) -> F.Column:
     """Incremental filter over the hashed entity: the row's content hash
-    differs from the stored one riding in ``__src__``, or none is stored
-    (new rows, stubs, hashes a prune or non-incremental run nulled).
-    A pre-incremental mapping table, or a transform that rebuilt
-    ``__src__``, carries no field: every row counts as changed once and
-    the hashes backfill on this run's mapping merge."""
+    differs from the stored one riding in ``__src__``, or none counts
+    (new rows, stubs, hashes a non-incremental run nulled, and rows the
+    destination no longer holds — pruned or deleted out of band — whose
+    stored hash prepare() masks). A pre-incremental mapping table, or a
+    transform that rebuilt ``__src__``, carries no field: every row
+    counts as changed once and the hashes backfill on this run's
+    mapping merge."""
     if PREV_HASH not in entity.schema[SRC_STRUCT].dataType.fieldNames():
         return F.lit(True)
     prev = F.col(f"{SRC_STRUCT}.{PREV_HASH}")
     return prev.isNull() | (prev != F.col(ROW_HASH))
-
-
-def _pruned_mappings(
-    mapper: MappingStore, m: Migration, orphan_ids: DataFrame
-) -> DataFrame:
-    """Mapping rows of the orphans a prune deletes, in mapping-batch
-    shape with a NULL ``row_hash``. Orphan-preserve rows (all-NULL
-    source ids) are not addressable by source key and stay out."""
-    prev = mapper.load(m.mapping_key(), m.source_ids, m.destination_ids)
-    not_all_null = None
-    for f in m.source_ids:
-        c = prev[src_col(f)].isNotNull()
-        not_all_null = c if not_all_null is None else (not_all_null | c)
-    renamed = orphan_ids.select(
-        *[F.col(f.name).alias(dest_col(f)) for f in m.destination_ids]
-    )
-    return (
-        prev.filter(not_all_null)
-        .join(renamed, on=[dest_col(f) for f in m.destination_ids], how="left_semi")
-        .select(
-            *[src_col(f) for f in m.source_ids],
-            *[dest_col(f) for f in m.destination_ids],
-            F.lit(None).cast("long").alias("row_hash"),
-        )
-    )
 
 
 def existing_field(df: DataFrame, name: str, default) -> F.Column:
@@ -174,13 +154,6 @@ def prepare(
         c = src[f.name].eqNullSafe(map_df[src_col(f)])
         cond = c if cond is None else (cond & c)
     joined = src.join(map_df, on=cond, how="left")
-    if "row_hash" in map_df.columns:
-        # the stored hash rides inside __src__, the one column every
-        # transform keeps, so the incremental skip needs no second
-        # mapping read (see _changed)
-        joined = joined.withColumn(
-            SRC_STRUCT, F.col(SRC_STRUCT).withField(PREV_HASH, map_df["row_hash"])
-        )
 
     dest_names = [f.name for f in m.destination_ids]
     snap = m.destination.read_snapshot(spark)
@@ -200,6 +173,18 @@ def prepare(
     else:
         joined = joined.withColumn(EXISTING, F.lit(None))
         existing_ids = None
+    if "row_hash" in map_df.columns:
+        # the stored hash rides inside __src__, the one column every
+        # transform keeps, so the incremental skip needs no second
+        # mapping read (see _changed). It counts only while the
+        # destination holds the row: a pruned row, or one deleted out
+        # of band, is written again when it returns unchanged
+        prev_hash = map_df["row_hash"]
+        if snap is not None:
+            prev_hash = F.when(F.col(EXISTING).isNotNull(), prev_hash)
+        joined = joined.withColumn(
+            SRC_STRUCT, F.col(SRC_STRUCT).withField(PREV_HASH, prev_hash)
+        )
 
     # Precompute destination ids: keep the mapped id when the row was
     # migrated before, else mint a deterministic one (C5 + §4.3).
@@ -344,7 +329,8 @@ def run_migration(
     rows whose hash is unchanged since the last run SKIP the
     destination and mapping merges entirely (a 100 TB re-run where 1%
     drifted writes 1%). The stored hash arrives with prepare()'s
-    mapping join inside ``__src__``, so the skip is a filter on the
+    mapping join inside ``__src__``, and counts only while the
+    destination snapshot holds the row, so the skip is a filter on the
     persisted entity. Orphan detection still sees the full entity set,
     so prune/preserve/report are unaffected. First run after enabling
     (or over a pre-incremental mapping table, or with a transform that
@@ -353,6 +339,15 @@ def run_migration(
     rows are reported separately in ``rows_unchanged``
     (``rows_skipped`` stays rows_in − rows_written: transform-filtered
     PLUS unchanged).
+
+    Commits, in order: the destination merge, which also deletes a
+    prune's orphans (one commit where the sink can), then the mapping
+    merge. A prune keeps the orphans' mapping rows and stored hashes:
+    a returning row re-acquires its id, and is rewritten because the
+    destination no longer holds it. A crash between the two commits
+    converges on the next run over the same source: stale hashes
+    rewrite the changed rows and missing destination rows re-insert
+    the pruned ones.
     """
     if orphan_policy not in {"keep", "prune", "preserve", "report"}:
         raise ValueError(f"unknown orphan policy {orphan_policy!r}")
@@ -400,8 +395,8 @@ def run_migration(
 
         # orphans are diffed against the PRE-RUN snapshot, so they are
         # known before any commit. Pinned (lazily: the count is the
-        # materializing job) because prune consults them twice more —
-        # the mapping merge and the destination delete
+        # materializing job) because prune consults them again in the
+        # destination merge's match
         orphan_ids = None
         orphan_count = 0
         if existing_ids is not None:
@@ -411,9 +406,13 @@ def run_migration(
             orphan_count = orphan_ids.count()
         prune = orphan_policy == "prune" and orphan_count > 0
 
-        if rows_written or not incremental:
-            m.destination.merge(write_set.drop(SRC_STRUCT, ROW_HASH))
-        if record_mappings and (rows_written or not incremental or prune):
+        if rows_written or not incremental or prune:
+            # one destination commit carries the upserts and the prune
+            m.destination.merge(
+                write_set.drop(SRC_STRUCT, ROW_HASH),
+                delete=orphan_ids if prune else None,
+            )
+        if record_mappings and (rows_written or not incremental):
             # non-incremental runs must NULL the stored hash for
             # every row they rewrite: leaving a stale hash behind
             # would make a LATER incremental run silently skip a
@@ -430,14 +429,6 @@ def run_migration(
                     else F.lit(None).cast("long")
                 },
             )
-            if prune:
-                # prune keeps a pruned row's mapping (its dest id
-                # survives a return) but NULLs its stored hash in the
-                # same mapping commit, so an incremental run re-inserts
-                # the row when it comes back with unchanged content
-                mb = mb.unionByName(
-                    _pruned_mappings(mapper, m, orphan_ids)
-                )
             mapper.merge(
                 m.mapping_key(), mb, m.source_ids, m.destination_ids, STATUS_MIGRATED
             )
@@ -446,9 +437,7 @@ def run_migration(
         if existing_ids is not None:
             # Materialize the orphan rows (readMultiple analogue, C6)
             orphan_rows = snap.join(orphan_ids, on=dest_names, how="left_semi")
-            if prune:
-                m.destination.delete_keys(orphan_ids)
-            elif orphan_policy == "preserve" and orphan_count:
+            if orphan_policy == "preserve" and orphan_count:
                 # Reference --preserve: keep rows and add mapping rows with
                 # all-NULL source ids (DataMigrationExecutor.php:275-328).
                 null_src = orphan_ids.select(

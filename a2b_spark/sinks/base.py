@@ -50,8 +50,8 @@ class VersionedTableDestination:
     def read_snapshot(self, spark: SparkSession) -> Optional[DataFrame]:
         return self.table.read(spark)
 
-    def merge(self, batch: DataFrame) -> None:
-        self.table.merge(batch)
+    def merge(self, batch: DataFrame, delete: Optional[DataFrame] = None) -> None:
+        self.table.merge(batch, delete=delete)
 
     def delete_keys(self, keys_df: DataFrame) -> None:
         self.table.delete_keys(keys_df)
@@ -82,12 +82,16 @@ class Destination(Protocol):
         (getExistingIds/read/readMultiple collapse into joins on this)."""
         ...
 
-    def merge(self, batch: DataFrame) -> None:
-        """Keyed upsert of the batch (write + update-on-rerun, C5)."""
+    def merge(self, batch: DataFrame, delete: Optional[DataFrame] = None) -> None:
+        """Keyed upsert of the batch (write + update-on-rerun, C5) that
+        also removes the rows keyed by ``delete`` (the orphan prune,
+        C7); a key in both ends as the batch row. Versioned tables
+        commit both at once where they can, so a re-run commits its
+        destination once."""
         ...
 
     def delete_keys(self, keys_df: DataFrame) -> None:
-        """Remove rows matching the key tuples (orphan prune, C7)."""
+        """Remove rows matching the key tuples (retraction)."""
         ...
 
     def read_multiple(self, spark: SparkSession, keys_df: DataFrame) -> DataFrame:

@@ -18,7 +18,7 @@ class ConsoleDestination:
     def read_snapshot(self, spark: SparkSession) -> Optional[DataFrame]:
         return None
 
-    def merge(self, batch: DataFrame) -> None:
+    def merge(self, batch: DataFrame, delete: Optional[DataFrame] = None) -> None:
         batch.show(self.max_rows, truncate=self.truncate)
 
     def delete_keys(self, keys_df: DataFrame) -> None:

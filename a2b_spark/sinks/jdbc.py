@@ -195,7 +195,9 @@ class JdbcDestination:
         batch = batch.localCheckpoint(eager=True)
         self._writer(batch, self.table).save()
 
-    def merge(self, batch: DataFrame) -> None:
+    def merge(self, batch: DataFrame, delete: Optional[DataFrame] = None) -> None:
+        if delete is not None:
+            self.delete_keys(delete)
         if self.merge_sql_template:
             self._merge_staged(batch)
         else:

@@ -57,10 +57,12 @@ class YamlDirDestination:
         except Exception:
             return None
 
-    def merge(self, batch: DataFrame) -> None:
+    def merge(self, batch: DataFrame, delete: Optional[DataFrame] = None) -> None:
         """File-per-entity upsert: each row writes (or overwrites) its
         own path — per-file atomicity via tempfile+rename, the same
-        trick as the reference's flush."""
+        trick as the reference's flush. ``delete``'s files go first."""
+        if delete is not None:
+            self.delete_keys(delete)
         base, ids = self.path, self.key_cols
         os.makedirs(base, exist_ok=True)
         payload_cols = [c for c in batch.columns if c not in ids]

@@ -1358,9 +1358,17 @@ class VersionedParquetTable:
         self._claim_version_dir(tmp_target, version)
         self._commit(version, base=base)
 
-    def merge(self, batch: DataFrame) -> None:
+    def merge(self, batch: DataFrame, delete: Optional[DataFrame] = None) -> None:
         """Keyed upsert (MERGE INTO … WHEN MATCHED UPDATE WHEN NOT
-        MATCHED INSERT), NULL-safe on the key columns."""
+        MATCHED INSERT), NULL-safe on the key columns.
+
+        ``delete`` (key tuples under the key columns' names) also
+        removes those rows (… WHEN NOT MATCHED BY SOURCE THEN DELETE,
+        by key); a key in both ends as the batch row. The merge-on-read
+        path carries both in ONE commit: one vector delta tombstones
+        the replaced and the deleted rows alike. Every other path
+        (partitioned, CDF-enabled, key-clustered, vectors off, a vector
+        past its cap) commits ``delete_keys(delete)``, then the merge."""
         spark = batch.sparkSession
         base = self.current_version()
         if base is None:
@@ -1369,6 +1377,17 @@ class VersionedParquetTable:
         tombstone_clash = bool(
             self._dropped_tombstones(base) & set(batch.columns)
         )
+        # copy-on-write when _STATS isolates the matching files
+        # (key-clustered tables), else merge-on-read with vectors
+        mor = (
+            not self.partition_by and not tombstone_clash
+            and self.deletion_vectors and self.fmt in ("parquet", "orc")
+        )
+        isolate = mor and self._stats_may_isolate(os.path.join(self.path, base))
+        if delete is not None and (not mor or isolate or self.cdf_enabled(base)):
+            self.delete_keys(delete)
+            self.merge(batch)
+            return
         # PIN the batch once (the repo's fan-out-frame discipline, like
         # delete_keys pins its key set): merge consults it from up to 4
         # independent actions — the _prunable_key_files pre-check/
@@ -1388,15 +1407,20 @@ class VersionedParquetTable:
         elif self.partition_by or not tombstone_clash or self.cdf_enabled(base):
             batch = batch.localCheckpoint(eager=True)
         if not self.partition_by and not tombstone_clash:
-            # copy-on-write when _STATS isolates the matching files
-            # (key-clustered tables), else merge-on-read with vectors
-            mor = self.deletion_vectors and self.fmt in ("parquet", "orc")
-            if (
-                not mor or self._stats_may_isolate(os.path.join(self.path, base))
-            ) and self._try_merge_file_pruned(spark, batch, base):
+            if (not mor or isolate) and self._try_merge_file_pruned(
+                spark, batch, base
+            ):
                 return
-            if mor and self._try_merge_on_read(spark, batch, base):
+            if delete is not None:
+                # pinned like the batch (the match and the fold both read
+                # it); lazily: the match is its materializing job
+                delete = delete.select(*self.key_cols).localCheckpoint(eager=False)
+            if mor and self._try_merge_on_read(spark, batch, base, delete):
                 return
+        if delete is not None:  # merge-on-read declined (e.g. the vector cap)
+            self.delete_keys(delete)
+            self.merge(batch)
+            return
         current = self.read(spark, version=base)  # pinned snapshot
         cdf = None
         if self.cdf_enabled(base):
@@ -1949,7 +1973,8 @@ class VersionedParquetTable:
         return True
 
     def _try_merge_on_read(
-        self, spark: SparkSession, batch: DataFrame, base: str
+        self, spark: SparkSession, batch: DataFrame, base: str,
+        delete: Optional[DataFrame] = None,
     ) -> bool:
         """MERGE-ON-READ keyed merge into an unpartitioned parquet/ORC
         table with deletion vectors (Delta DV / Iceberg v2 position
@@ -1960,21 +1985,25 @@ class VersionedParquetTable:
         key band spans the whole key range (salted hash ids,
         hash-partitioned files), where file pruning keeps everything.
 
-        The match (one table scan, key columns only) is collected
-        driver-side as the vector entries, capped at DV_MAX_KEYS+1. A
-        batch carrying every table column IS the new rows; otherwise
-        the matched old rows fill the missing columns. Fold rule: a file
-        whose tombstoned share passes ``DV_FOLD_FRACTION`` is not
-        linked; its remaining live rows join this commit's new files
-        and its entries leave the vector.
+        The match (one table scan, key columns only) over the batch keys
+        and the ``delete`` keys is collected driver-side as the vector
+        entries, capped at DV_MAX_KEYS+1: replaced and deleted rows are
+        tombstoned by one delta. A batch carrying every table column IS
+        the new rows; otherwise the batch's own matched old rows fill
+        the missing columns. Fold rule: a file whose tombstoned share
+        passes ``DV_FOLD_FRACTION`` is not linked; its remaining live
+        rows (neither replaced nor deleted) join this commit's new
+        files and its entries leave the vector.
 
         Returns False (caller runs the full-rewrite path) when the base
         has no data files, the merge would change the type of a stored
         column (linked files keep their physical type), or the matched
         rows plus the carried vector would pass DV_MAX_KEYS.
 
-        PRECONDITION: ``batch`` is pinned (merge() localCheckpoints
-        it) — it is consulted by the match, the merge and the CDF."""
+        PRECONDITION: ``batch`` and ``delete`` are pinned (merge()
+        localCheckpoints them) — the batch is consulted by the match,
+        the merge and the CDF, the delete keys by the match and the
+        fold."""
         from a2b_spark.storage import stats as _stats
         from a2b_spark.storage.diff import merge_changes, null_safe_key_cond
 
@@ -1994,10 +2023,10 @@ class VersionedParquetTable:
             for f in batch.schema.fields
         ):
             return False
-        batch_keys = batch.select(*self.key_cols).alias("b")
-        matched = scan.alias("c").join(
-            batch_keys, null_safe_key_cond(self.key_cols, "c", "b"), "left_semi"
-        )
+        key_cond = null_safe_key_cond(self.key_cols, "c", "b")
+        batch_keys = batch.select(*self.key_cols)
+        keys = batch_keys if delete is None else batch_keys.unionByName(delete)
+        matched = scan.alias("c").join(keys.alias("b"), key_cond, "left_semi")
         entries = (
             matched.select(DV_FILE, *self.key_cols).limit(DV_MAX_KEYS + 1).toArrow()
         )
@@ -2021,17 +2050,21 @@ class VersionedParquetTable:
             if rows.get(name) and n_dead > DV_FOLD_FRACTION * rows[name]
         }
         # the old rows are re-derived (same immutable base version) only
-        # where needed: for CDF, and for columns the batch does not carry
-        old_rows = matched.drop(DV_FILE)
+        # where needed: for CDF, and for columns the batch does not carry;
+        # deleted rows are no old rows of the batch
+        old_rows = (
+            matched if delete is None
+            else scan.alias("c").join(batch_keys.alias("b"), key_cond, "left_semi")
+        ).drop(DV_FILE)
         if set(stored) - {DV_FILE} <= set(batch.columns):
             new_rows = batch  # each batch row replaces its old row whole
         else:
             new_rows = merge_dataframes(old_rows, batch, self.key_cols)
         if any(dead[name] < rows[name] for name in fold):
-            # live rows of folded files not replaced by the batch
+            # live rows of folded files neither replaced nor deleted
             folded = [os.path.join(vdir, r) for r in all_rels if ids[r] in fold]
             survivors = self._scan_files(spark, base, folded, schema).alias("c").join(
-                batch_keys, null_safe_key_cond(self.key_cols, "c", "b"), "left_anti"
+                keys.alias("b"), key_cond, "left_anti"
             )
             new_rows = new_rows.unionByName(survivors, allowMissingColumns=True)
         cdf = None

@@ -159,6 +159,106 @@ def test_mor_fold_rewrites_only_over_threshold_files(spark, tmp_path):
     assert base in t.versions()
 
 
+# ------------------------------------------- merge carrying deletes
+_TWIN_PATHS = {
+    "parquet_mor": {},
+    "partitioned": {"partition_by": ("p",)},
+    "cdf": {"cdf": True},
+    "orc_no_vectors": {"fmt": "orc", "deletion_vectors": False},
+}
+
+
+def _twin_tables(spark, tmp_path, fmt="parquet", deletion_vectors=True,
+                 partition_by=None, cdf=False):
+    """Two tables with the same hashed-key rows."""
+    data = spark.range(0, 60).select(
+        F.xxhash64("id").alias("k"), F.col("id").alias("i"),
+        (F.col("id") % 3).alias("p"), F.concat(F.lit("v"), F.col("id")).alias("v"),
+    ).repartition(3).localCheckpoint()
+    twins = []
+    for name in ("one", "two"):
+        t = VersionedParquetTable(
+            str(tmp_path / name), key_cols=("k",), partition_by=partition_by,
+            retention=10, deletion_vectors=deletion_vectors, fmt=fmt,
+        )
+        t.overwrite(data)
+        if cdf:
+            t.enable_cdf()
+        twins.append(t)
+    return twins
+
+
+@pytest.mark.parametrize("path", sorted(_TWIN_PATHS))
+def test_merge_with_delete_reads_as_delete_then_merge(spark, tmp_path, path):
+    """``merge(batch, delete=keys)`` reads as ``delete_keys(keys)`` then
+    ``merge(batch)`` on every path; a key in both ends as the batch row.
+    Merge-on-read commits it as one ``merge`` version."""
+    from a2b_spark.storage.cdf import table_changes
+
+    one, two = _twin_tables(spark, tmp_path, **_TWIN_PATHS[path])
+    base, n_versions = one.current_version(), len(one.versions())
+    k0, k1, k2, k3, new = (_key(spark, i) for i in (0, 1, 2, 3, 500))
+    batch = spark.createDataFrame(
+        [(k0, 0, 0, "upd"), (k1, 1, 1, "both"), (new, 500, 2, "new")],
+        "k long, i long, p long, v string",
+    )
+    delete = spark.createDataFrame([(k1,), (k2,), (k3,)], "k long")
+    model = _model(one, spark)
+    one.merge(batch, delete=delete)
+    two.delete_keys(delete)
+    two.merge(batch)
+    for k in (k2, k3):
+        del model[k]
+    model.update({k0: (0, "upd"), k1: (1, "both"), new: (500, "new")})
+    assert _model(one, spark) == model
+    assert _model(two, spark) == model
+    if path == "parquet_mor":
+        assert len(one.versions()) == n_versions + 1
+        assert one.history()[-1]["op"] == "merge"
+        assert sorted(k for _, k in _vector(one)) == sorted((k0, k1, k2, k3))
+    if path == "cdf":
+        def changes(t):
+            return sorted(
+                (r.k, r.change, r._commit_version)
+                for r in table_changes(t, spark, from_version=base).collect()
+            )
+
+        got = changes(one)
+        assert {(k, c) for k, c, _ in got} >= {(k2, "delete"), (k3, "delete")}
+        assert got == changes(two)
+
+
+def test_merge_with_delete_folds_without_deleted_rows(spark, tmp_path):
+    """Keys a merge deletes inside a file it folds do not ride along
+    with the folded file's live rows, nor fill a partial batch's
+    missing columns as old rows."""
+    from a2b_spark.storage.table import DV_FOLD_FRACTION
+
+    t = _hashed_table(spark, tmp_path, n=20, files=2)
+    by_file = {}
+    for r in t.read(spark).select(
+        "k", "i", F.col("_metadata.file_name").alias("f")
+    ).collect():
+        by_file.setdefault(r.f, []).append((r.k, r.i))
+    (fa, rows_a), (fb, rows_b) = sorted(by_file.items(), key=lambda x: -len(x[1]))
+    n_a = int(len(rows_a) * DV_FOLD_FRACTION) + 1  # over the threshold
+    gone = [k for k, _ in rows_a[:n_a]]
+    model = _model(t, spark)
+    t.merge(
+        spark.createDataFrame([(rows_b[0][0], "u")], "k long, v string"),
+        delete=spark.createDataFrame([(k,) for k in gone], "k long"),
+    )
+    names = {
+        os.path.basename(p)
+        for p in _data_files(os.path.join(t.path, t.current_version()))
+    }
+    assert fa not in names and fb in names
+    for k in gone:
+        del model[k]
+    model[rows_b[0][0]] = (rows_b[0][1], "u")
+    assert _model(t, spark) == model
+
+
 # ------------------------------------------------------- model test
 def _spread(i: int) -> int:
     """Small model key -> a salted 63-bit id, so file key bands

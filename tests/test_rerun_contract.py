@@ -1,8 +1,8 @@
 """The re-run contract under ``incremental=True`` + ``orphan_policy=
 "prune"``: a re-run over drifted sources gives the destination and
-mapping a clean run would give — including rows that were pruned and
-then come back with unchanged content, and after a crash between two
-commits of one run."""
+mapping a clean run would give — including rows that were pruned, or
+deleted out of band, and then come back with unchanged content, and
+after a crash inside or between the commits of one run."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -12,6 +12,7 @@ from a2b_spark.exec.executor import run_migration
 from a2b_spark.mapping.store import MappingStore
 from a2b_spark.sinks.parquet import ParquetDestination
 from a2b_spark.sources.base import DataFrameSource
+from a2b_spark.storage.table import VersionedParquetTable
 
 DROPPED = 3  # rows version B drops (lowest keys)
 UPDATED = 2  # rows version B changes (next keys)
@@ -94,19 +95,40 @@ def test_pruned_rows_return_under_incremental_prune(spark, tmp_path, versions):
     assert maps == first[1]
 
 
-@pytest.mark.parametrize("crash_at", ["mapping_merge", "orphan_delete"])
+def test_row_deleted_out_of_band_comes_back(spark, tmp_path, versions):
+    """A destination row removed behind the migration's back is
+    re-inserted under its old id by the next incremental run over the
+    unchanged source: its stored hash counts only while the destination
+    holds the row."""
+    v, _ = versions
+    root = str(tmp_path / "t")
+    _run(spark, v["A"], root)
+    first = _state(spark, root)
+    gone = first[0][0][0]
+    m = _mig(v["A"], root)
+    m.destination.delete_keys(spark.createDataFrame([(gone,)], "id long"))
+    assert gone not in {r[0] for r in _state(spark, root)[0]}
+    r = _run(spark, v["A"], root)
+    assert (r.rows_written, r.orphan_count) == (1, 0)
+    assert _state(spark, root) == first
+
+
+@pytest.mark.parametrize("crash_at", ["dest_commit", "mapping_merge"])
 def test_crash_between_commits_converges(
     spark, tmp_path, versions, monkeypatch, crash_at
 ):
-    """A crash after the destination commit (before the mapping merge)
-    or after the mapping commit (before the orphan delete): the next
-    run over the same source reaches the clean run's state, and so
-    does the run after it."""
+    """A torn destination commit (staged, never claimed) or a crash
+    after the run's only destination commit, before the mapping merge
+    (pruned rows gone, their stored hashes intact): the next run over
+    the same source reaches the clean run's state, and so does the run
+    after it."""
     v, _ = versions
     clean, crashed = str(tmp_path / "clean"), str(tmp_path / "crashed")
     for root in (clean, crashed):
         _run(spark, v["A"], root)
     _run(spark, v["B"], clean)
+    table = _mig(v["B"], crashed).destination.table
+    before = table.current_version()
 
     def boom(*_a, **_k):
         raise RuntimeError("injected crash")
@@ -114,10 +136,19 @@ def test_crash_between_commits_converges(
     if crash_at == "mapping_merge":
         monkeypatch.setattr(MappingStore, "merge", boom)
     else:
-        monkeypatch.setattr(ParquetDestination, "delete_keys", boom)
+        commit = VersionedParquetTable._commit_linked_files
+
+        def torn(self, *a, **k):
+            monkeypatch.setattr(VersionedParquetTable, "_claim_version_dir", boom)
+            commit(self, *a, **k)
+
+        monkeypatch.setattr(VersionedParquetTable, "_commit_linked_files", torn)
     with pytest.raises(RuntimeError, match="injected crash"):
         _run(spark, v["B"], crashed)
     monkeypatch.undo()
+    # a torn commit never becomes visible; the mapping crash follows
+    # the run's only destination commit
+    assert (table.current_version() == before) == (crash_at == "dest_commit")
     _run(spark, v["B"], crashed)
     assert _state(spark, crashed) == _state(spark, clean)
     for root in (clean, crashed):

@@ -8,7 +8,9 @@ kept, pruned, preserved or reported).
 
 The model also fixes the stored content hash of each mapping row: the
 hash of the row's last written content after an incremental run, NULL
-after a non-incremental rewrite or a prune."""
+after a non-incremental rewrite. A prune keeps the hash; a stored hash
+counts only while the destination holds the row, so an incremental run
+writes a row the destination lacks even when its hash matches."""
 
 import os
 
@@ -58,7 +60,9 @@ class Model:
         """Apply one run; returns (rows_written, orphan_count)."""
         if incremental:
             written = sum(
-                1 for k, c in version.items() if self.hashed.get(k) is None or self.hashed[k] != c
+                1
+                for k, c in version.items()
+                if k not in self.dest or self.hashed.get(k) is None or self.hashed[k] != c
             )
         else:
             written = len(version)
@@ -69,7 +73,6 @@ class Model:
         if policy == "prune":
             for k in orphans:
                 del self.dest[k]
-                self.hashed[k] = None
         elif policy == "preserve":
             self.preserved |= orphans
         return written, len(orphans)

@@ -327,8 +327,9 @@ def test_maker_rejects_invalid_inputs(tmp_path):
         make_migration(str(tmp_path), "bad-name", "s", "d")
 
 
-def _customer_registry(spark, tmp_path, sf_dir, n=15):
-    src = spark.read.parquet(f"{sf_dir}/customer.parquet").limit(n).localCheckpoint()
+def _customer_registry(spark, tmp_path, sf_dir, n=15, src=None):
+    if src is None:
+        src = spark.read.parquet(f"{sf_dir}/customer.parquet").limit(n).localCheckpoint()
     reg = MigrationRegistry()
     reg.register(
         Migration(
@@ -376,6 +377,10 @@ def test_run_pipeline_incremental_skips_unchanged(spark, tmp_path, sf_dir):
 # never-run migration's empty mapping table, fails here
 FRESH_RUN_JOBS = 4
 UNCHANGED_RERUN_JOBS = 7
+# an incremental prune re-run that drops one row and updates one, on a
+# merge-on-read destination: the prune rides the destination merge's
+# commit, so a separate delete commit fails here
+PRUNE_RERUN_JOBS = 17
 JOB_HEADROOM = 2
 
 
@@ -393,3 +398,37 @@ def test_job_budget_fresh_and_unchanged_rerun(spark, tmp_path, sf_dir):
     assert [r.rows_written for r in runs] == [15, 0]
     assert runs[0].spark_metrics["jobs"] <= FRESH_RUN_JOBS + JOB_HEADROOM
     assert runs[1].spark_metrics["jobs"] <= UNCHANGED_RERUN_JOBS + JOB_HEADROOM
+
+
+def test_job_budget_prune_rerun(spark, tmp_path, sf_dir):
+    """An incremental prune re-run commits its destination once: no
+    separate delete commit, no mapping read to null pruned hashes."""
+    # two source partitions -> two destination files whose hashed-id
+    # bands overlap, so the re-run merges merge-on-read
+    a = (
+        spark.read.parquet(f"{sf_dir}/customer.parquet")
+        .limit(15)
+        .repartition(2)
+        .localCheckpoint()
+    )
+    keys = sorted(r.c_custkey for r in a.select("c_custkey").collect())
+    b = (
+        a.filter(F.col("c_custkey") != keys[0])
+        .withColumn(
+            "c_name",
+            F.when(F.col("c_custkey") == keys[1], F.lit("renamed"))
+            .otherwise(F.col("c_name")),
+        )
+        .localCheckpoint()
+    )
+    runs = []
+    for src in (a, b):
+        reg, mapper = _customer_registry(spark, tmp_path, sf_dir, src=src)
+        runs.append(
+            run_pipeline(
+                spark, reg, mapper, orphan_policy="prune", incremental=True,
+                progress=lambda *a: None,
+            )["rerun_mig"]
+        )
+    assert (runs[1].rows_written, runs[1].orphan_count) == (1, 1)
+    assert runs[1].spark_metrics["jobs"] <= PRUNE_RERUN_JOBS + JOB_HEADROOM

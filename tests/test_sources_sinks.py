@@ -136,6 +136,17 @@ def test_yaml_destination_round_trip(spark, tmp_path):
 
     dest.delete_keys(spark.createDataFrame([("g1", "b")], "group string, ident string"))
     assert dest.read_snapshot(spark).count() == 3
+    # a merge carrying deletes: a key in both ends as the batch row
+    dest.merge(
+        spark.createDataFrame(
+            [("g1", "a", "A2", 11)], "group string, ident string, name string, rank int"
+        ),
+        delete=spark.createDataFrame(
+            [("g1", "a"), ("g2", "c")], "group string, ident string"
+        ),
+    )
+    back = {(r["group"], r["ident"]): r["name"] for r in dest.read_snapshot(spark).collect()}
+    assert back == {("g1", "a"): "A2", ("g2", "d"): "Delta"}
 
 
 def test_csv_destination_keyed_merge_and_schema(spark, tmp_path):
