@@ -10,17 +10,18 @@ Spark dataflow (SURVEY §3.2): the whole loop is
 
     source
       → cast ids (C2)
-      → left-join mapping table (C3): dest ids + stored row hash
-      → left-join destination snapshot → ``__existing`` struct (C4);
-        the stored hash counts only where the snapshot holds the row
+      → left-join mapping table (C3): mapped dest ids + status
+      → left-join destination snapshot → ``__existing`` struct (C4)
       → transform (C1; filter = skip)
       → assign deterministic dest ids
+      → flag changed rows (incremental: unlike the destination row)
+        and unmapped ones (no mapping row, a stub, other dest ids)
       → persist the entity; ONE aggregate materializes it and counts
-        (rows processed, rows changed)
+        (rows, changed rows, unmapped rows)
       → anti-join for orphans (C6) against the pre-run snapshot
-      → MERGE into destination (C5), carrying a prune's deletes (C7):
-        one destination commit
-      → MERGE into mapping table
+      → MERGE changed rows into destination (C5), carrying a prune's
+        deletes (C7): one destination commit
+      → MERGE unmapped rows into mapping table (none: no commit)
 
 Per-row becomes per-partition; the joins shuffle on the key columns
 (or broadcast when one side is small — AQE decides at runtime); no
@@ -29,14 +30,12 @@ mapping table is planner-visibly empty, so its join is planned away.
 
 Transform contract (mirrors DataMigrationInterface::transform):
 - receives the prepared DataFrame: source columns, ``__src__`` struct
-  (the cast source-id tuple plus, once the mapping table stores
-  hashes, the hidden ``__prev_hash`` field — the incremental skip's
-  stored content hash; keep the struct as-is, DO NOT drop or rebuild
-  it: a rebuilt struct loses the hash and every row counts as
-  changed), ``__existing`` struct (previously-migrated destination
-  entity, null on first sight), and ``__dest_<id>`` precomputed
-  destination ids (existing mapping if present, else a deterministic
-  hash of the source key).
+  (the cast source-id tuple plus two hidden fields the executor reads
+  after the transform: the destination row and the mapping row's dest
+  ids and status; keep the struct as-is), ``__existing`` struct
+  (previously-migrated destination entity, null on first sight), and
+  ``__dest_<id>`` precomputed destination ids (existing mapping if
+  present, else a deterministic hash of the source key).
 - returns the entity DataFrame. Dropping rows (``.filter``) = the
   reference's "return null to skip". Updating-in-place = coalescing
   against ``__existing.<col>``.
@@ -57,6 +56,7 @@ from a2b_spark.core.migration import Migration
 from a2b_spark.mapping.store import (
     MappingStore,
     STATUS_MIGRATED,
+    STATUS_STUB,
     dest_col,
     mapping_batch,
     src_col,
@@ -64,41 +64,52 @@ from a2b_spark.mapping.store import (
 
 SRC_STRUCT = "__src__"
 EXISTING = "__existing"
-ROW_HASH = "__row_hash"
-PREV_HASH = "__prev_hash"  # hidden __src__ field: the stored row_hash
-
-
-def _with_row_hash(entity: DataFrame) -> DataFrame:
-    """Deterministic content hash of everything the destination would
-    receive: xxhash64 of the canonical JSON of the sorted payload
-    columns. JSON (with explicit nulls), not a bare multi-column
-    xxhash64 — the raw hash folds a NULL column as a no-op, so two
-    rows differing only in WHICH column is null would collide."""
-    payload = sorted(c for c in entity.columns if c not in (SRC_STRUCT, ROW_HASH))
-    return entity.withColumn(
-        ROW_HASH,
-        F.xxhash64(
-            F.to_json(
-                F.struct(*[F.col(c) for c in payload]),
-                {"ignoreNullFields": "false"},
-            )
-        ),
-    )
+SNAPSHOT = "__snapshot"  # hidden __src__ field: the destination row
+MAPPED = "__mapped"  # hidden __src__ field: mapped dest ids + status, or null
+CHANGED = "__changed"  # entity flag: write the destination row
+UNMAPPED = "__unmapped"  # entity flag: write the mapping row
+_CANONICAL = {
+    "ignoreNullFields": "false",
+    "timestampFormat": "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX",
+    "timestampNTZFormat": "yyyy-MM-dd'T'HH:mm:ss.SSSSSS",
+}
 
 
 def _changed(entity: DataFrame) -> F.Column:
-    """Incremental filter over the hashed entity: the row's content hash
-    differs from the stored one riding in ``__src__``, or none counts
-    (new rows, stubs, hashes a non-incremental run nulled, and rows the
-    destination no longer holds — pruned or deleted out of band — whose
-    stored hash prepare() masks). A pre-incremental mapping table, or a
-    transform that rebuilt ``__src__``, carries no field: every row
-    counts as changed once and the hashes backfill on this run's
-    mapping merge."""
-    if PREV_HASH not in entity.schema[SRC_STRUCT].dataType.fieldNames():
+    """Incremental change test against the destination row (hidden
+    ``__snapshot`` field): the entity's payload differs from that row
+    projected to the same columns and cast to their types, compared as
+    canonical JSON (explicit nulls, so a NULL moving between columns
+    differs; microseconds, where JSON's default keeps milliseconds). A
+    row or column the destination lacks counts as changed. Nothing is
+    stored beside the data, so no torn commit can leave it stale."""
+    payload = sorted(c for c in entity.columns if c != SRC_STRUCT)
+    src = entity.schema[SRC_STRUCT].dataType
+    if SNAPSHOT not in src.fieldNames() or set(payload) - set(src[SNAPSHOT].dataType.fieldNames()):
         return F.lit(True)
-    prev = F.col(f"{SRC_STRUCT}.{PREV_HASH}")
-    return prev.isNull() | (prev != F.col(ROW_HASH))
+    held = F.col(SRC_STRUCT).getField(SNAPSHOT)
+    types = {f.name: f.dataType for f in entity.schema.fields}
+    mine, theirs = (
+        F.to_json(F.struct(*cols), _CANONICAL)
+        for cols in (
+            [F.col(c) for c in payload],
+            [held.getField(c).cast(types[c]).alias(c) for c in payload],
+        )
+    )
+    return held.isNull() | (mine != theirs)
+
+
+def _unmapped(entity: DataFrame, m: Migration) -> F.Column:
+    """The row needs a mapping write (hidden ``__mapped`` field): no
+    mapping row, a stub, or other dest ids. Dest ids are deterministic,
+    so a changed row that is already mapped needs none."""
+    if MAPPED not in entity.schema[SRC_STRUCT].dataType.fieldNames():
+        return F.lit(True)
+    mapped = F.col(SRC_STRUCT).getField(MAPPED)
+    cond = mapped.isNull() | (mapped.getField("status") == STATUS_STUB)
+    for f in m.destination_ids:
+        cond = cond | ~F.col(f.name).eqNullSafe(mapped.getField(dest_col(f)))
+    return cond
 
 
 def existing_field(df: DataFrame, name: str, default) -> F.Column:
@@ -173,18 +184,18 @@ def prepare(
     else:
         joined = joined.withColumn(EXISTING, F.lit(None))
         existing_ids = None
-    if "row_hash" in map_df.columns:
-        # the stored hash rides inside __src__, the one column every
-        # transform keeps, so the incremental skip needs no second
-        # mapping read (see _changed). It counts only while the
-        # destination holds the row: a pruned row, or one deleted out
-        # of band, is written again when it returns unchanged
-        prev_hash = map_df["row_hash"]
-        if snap is not None:
-            prev_hash = F.when(F.col(EXISTING).isNotNull(), prev_hash)
-        joined = joined.withColumn(
-            SRC_STRUCT, F.col(SRC_STRUCT).withField(PREV_HASH, prev_hash)
-        )
+    # the destination row and the mapping state ride inside __src__,
+    # the one column every transform keeps (see _changed, _unmapped)
+    hidden = F.col(SRC_STRUCT).withField(
+        MAPPED,
+        F.when(
+            map_df["status"].isNotNull(),
+            F.struct(*[map_df[dest_col(f)] for f in m.destination_ids], map_df["status"]),
+        ),
+    )
+    if snap is not None:
+        hidden = hidden.withField(SNAPSHOT, F.col(EXISTING))
+    joined = joined.withColumn(SRC_STRUCT, hidden)
 
     # Precompute destination ids: keep the mapped id when the row was
     # migrated before, else mint a deterministic one (C5 + §4.3).
@@ -209,11 +220,6 @@ def prepare(
         *[map_df[dest_col(f)] for f in m.destination_ids],
         map_df["updated"],
         map_df["status"],
-        # the stored hash as a top-level column: without this drop a
-        # pass-through transform would carry the STALE hash into the
-        # entity (polluting the destination schema and making
-        # _with_row_hash never match) — it lives on in __src__ only
-        *([map_df["row_hash"]] if "row_hash" in map_df.columns else []),
     )
     return joined, snap, existing_ids
 
@@ -278,9 +284,7 @@ def finalize_entity(entity: DataFrame, m: Migration) -> DataFrame:
                 f"transform for {m.name!r} lost destination id {f.name!r} "
                 f"(keep '__dest_{f.name}' or emit {f.name!r})"
             )
-    if EXISTING in entity.columns:
-        entity = entity.drop(EXISTING)
-    return entity
+    return entity.drop(EXISTING)  # a no-op when the transform dropped it
 
 
 def _persist_orphan_report(
@@ -324,37 +328,34 @@ def run_migration(
     interactive prompt (MigrateCommand.php:123-133) is replaced by
     explicit policy; ``report`` returns the orphan rows.
 
-    ``incremental=True`` makes re-runs cost O(changed): each entity row
-    carries a content hash, the hash persists in the mapping table, and
-    rows whose hash is unchanged since the last run SKIP the
-    destination and mapping merges entirely (a 100 TB re-run where 1%
-    drifted writes 1%). The stored hash arrives with prepare()'s
-    mapping join inside ``__src__``, and counts only while the
-    destination snapshot holds the row, so the skip is a filter on the
-    persisted entity. Orphan detection still sees the full entity set,
-    so prune/preserve/report are unaffected. First run after enabling
-    (or over a pre-incremental mapping table, or with a transform that
-    rebuilt ``__src__``) writes everything once, backfilling hashes.
+    ``incremental=True`` makes re-runs cost O(changed): rows whose
+    content equals the row the destination already holds SKIP the
+    destination merge (a 100 TB re-run where 1% drifted writes 1%).
+    The destination row arrives with prepare()'s snapshot join inside
+    ``__src__``, so the skip is a flag on the persisted entity; no
+    content hash is stored anywhere. Orphan detection still sees the
+    full entity set, so prune/preserve/report are unaffected.
     ``rows_written`` counts rows actually merged; content-identical
     rows are reported separately in ``rows_unchanged``
     (``rows_skipped`` stays rows_in − rows_written: transform-filtered
     PLUS unchanged).
 
     Commits, in order: the destination merge, which also deletes a
-    prune's orphans (one commit where the sink can), then the mapping
-    merge. A prune keeps the orphans' mapping rows and stored hashes:
-    a returning row re-acquires its id, and is rewritten because the
-    destination no longer holds it. A crash between the two commits
-    converges on the next run over the same source: stale hashes
-    rewrite the changed rows and missing destination rows re-insert
-    the pruned ones.
+    prune's orphans (one commit where the sink can; with no changed
+    rows the prune is a delete alone), then the mapping merge of the
+    unmapped rows, if any. A prune keeps the orphans' mapping rows: a
+    returning row re-acquires its id, and is rewritten because the
+    destination no longer holds it. A crash between or inside the
+    commits converges on the next run over any source: change is
+    judged against the destination itself, and a row whose mapping
+    merge was lost still reads as unmapped.
     """
     if orphan_policy not in {"keep", "prune", "preserve", "report"}:
         raise ValueError(f"unknown orphan policy {orphan_policy!r}")
     if incremental and not record_mappings:
         raise ValueError(
-            "incremental mode stores row hashes in the mapping table; "
-            "record_mappings=False would rewrite everything every run"
+            "incremental re-runs keep the mapping table in step with the "
+            "destination; record_mappings=False leaves no mapping to keep"
         )
 
     prepared, snap, existing_ids = prepare(spark, m, mapper)
@@ -372,26 +373,29 @@ def run_migration(
         obs = Observation()
         prepared = prepared.observe(obs, F.count(F.lit(1)).alias("rows_in"))
 
-    entity = m.transform(prepared)
-    entity = finalize_entity(entity, m)
-    changed = F.lit(True)
-    if incremental:
-        entity = _with_row_hash(entity)
-        changed = _changed(entity)
+    entity = finalize_entity(m.transform(prepared), m)
+    # the flags replace the hidden fields before the cache: the cached
+    # entity carries two booleans, not a copy of the destination row
+    entity = entity.withColumns(
+        {
+            CHANGED: _changed(entity) if incremental else F.lit(True),
+            UNMAPPED: _unmapped(entity, m),
+            SRC_STRUCT: F.col(SRC_STRUCT).dropFields(SNAPSHOT, MAPPED),
+        }
+    )
 
     # Cache: the entity feeds the destination merge, the mapping merge,
-    # and the orphan diff. One aggregate (rows, changed rows) is the
-    # cache's eager materialization, before any consumer reads it
+    # and the orphan diff. One aggregate (rows, changed, unmapped) is
+    # the cache's eager materialization, before any consumer reads it
     # (persisted fan-out frames race their consumers under AQE).
     entity = entity.persist()
     try:
-        rows_processed, rows_written = entity.agg(
-            F.count(F.lit(1)), F.count_if(changed)
+        rows_processed, rows_written, rows_unmapped = entity.agg(
+            F.count(F.lit(1)), F.count_if(CHANGED), F.count_if(UNMAPPED)
         ).first()
         rows_in = int(obs.get["rows_in"]) if obs is not None else -1
 
         dest_names = [f.name for f in m.destination_ids]
-        write_set = entity.filter(changed) if incremental else entity
 
         # orphans are diffed against the PRE-RUN snapshot, so they are
         # known before any commit. Pinned (lazily: the count is the
@@ -406,28 +410,18 @@ def run_migration(
             orphan_count = orphan_ids.count()
         prune = orphan_policy == "prune" and orphan_count > 0
 
-        if rows_written or not incremental or prune:
+        if rows_written or (not incremental and not prune):
             # one destination commit carries the upserts and the prune
             m.destination.merge(
-                write_set.drop(SRC_STRUCT, ROW_HASH),
+                entity.filter(CHANGED).drop(SRC_STRUCT, CHANGED, UNMAPPED),
                 delete=orphan_ids if prune else None,
             )
-        if record_mappings and (rows_written or not incremental):
-            # non-incremental runs must NULL the stored hash for
-            # every row they rewrite: leaving a stale hash behind
-            # would make a LATER incremental run silently skip a
-            # row whose content rolled back to the hashed value
-            # while the destination holds something else entirely
-            # (round-6 review, reproduced)
+        elif prune:
+            # nothing to upsert: a delete commits no data files
+            m.destination.delete_keys(orphan_ids)
+        if record_mappings and rows_unmapped:
             mb = mapping_batch(
-                write_set,
-                m.source_ids,
-                m.destination_ids,
-                extra_cols={
-                    "row_hash": F.col(ROW_HASH)
-                    if incremental
-                    else F.lit(None).cast("long")
-                },
+                entity.filter(UNMAPPED), m.source_ids, m.destination_ids
             )
             mapper.merge(
                 m.mapping_key(), mb, m.source_ids, m.destination_ids, STATUS_MIGRATED

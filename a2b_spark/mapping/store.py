@@ -8,11 +8,19 @@ they *update* instead of duplicate; reverse lookups support
 cross-migration references.
 
 Spark design: one keyed Parquet table per mapping key under a base
-directory; all lookups are joins (broadcast when small), never
-driver-side point reads. At 100 TB the mapping table is itself big —
-it merges merge-on-read with deletion vectors (O(changed rows) written
-per re-run, see storage/table.py) and lookups stay distributed joins
-on the source-key columns.
+directory, with the reference's columns; all lookups are joins
+(broadcast when small), never driver-side point reads. At 100 TB the
+mapping table is itself big — it merges merge-on-read with deletion
+vectors (see storage/table.py) and lookups stay distributed joins on
+the source-key columns.
+
+A run writes mapping rows only for keys that have none, stubs it
+promotes, or keys re-pointed to other dest ids (exec.executor): dest
+ids are deterministic, so an already-mapped changed row costs no
+mapping write. ``updated`` is when the row was inserted, promoted or
+re-pointed (the reference refreshed it on every update; nothing here
+reads it). A table with the ``row_hash`` column of the earlier
+stored-hash skip loads without it.
 """
 
 from __future__ import annotations
@@ -92,10 +100,11 @@ class MappingStore:
         """The mapping table as a DataFrame (empty with correct schema if
         the migration has never run — planner-visibly empty, so a first
         run's mapping join is removed at plan time)."""
+        schema = self.schema(source_ids, dest_ids)
         df = self.table(mapping_key, source_ids, dest_ids).read(self.spark)
         if df is not None:
-            return df
-        return empty_frame(self.spark, self.schema(source_ids, dest_ids))
+            return df.select(*schema.fieldNames())
+        return empty_frame(self.spark, schema)
 
     def merge(
         self,
@@ -107,7 +116,7 @@ class MappingStore:
         key_side: str = "source",
     ) -> None:
         """Upsert mapping rows keyed on the source-id columns: insert if
-        unseen, else refresh ``updated``+``status`` and the dest ids
+        unseen, else set ``updated``+``status`` and the dest ids
         (reference addMapping/updateMapping, DataMigrationMapper.php:90-135).
 
         ``batch`` must carry the source_*/dest_* columns (use
@@ -207,19 +216,13 @@ def _retract_source_keys(
 
 
 def mapping_batch(
-    entity: DataFrame,
-    source_ids: Sequence[IdField],
-    dest_ids: Sequence[IdField],
-    extra_cols: dict | None = None,
+    entity: DataFrame, source_ids: Sequence[IdField], dest_ids: Sequence[IdField]
 ) -> DataFrame:
     """Project an entity DataFrame into mapping-table shape.
 
     Source id values ride in the executor-maintained ``__src__`` struct
     (collision-proof when a field name appears in both id sets); dest
-    id values are the entity's plain columns. ``extra_cols`` maps
-    additional output names to Column expressions over the entity
-    (incremental mode rides its ``row_hash`` along this way)."""
+    id values are the entity's plain columns."""
     cols = [F.col(f"__src__.{f.name}").alias(src_col(f)) for f in source_ids]
     cols += [F.col(f.name).alias(dest_col(f)) for f in dest_ids]
-    cols += [expr.alias(name) for name, expr in (extra_cols or {}).items()]
     return entity.select(*cols)

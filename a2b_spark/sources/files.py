@@ -3,7 +3,8 @@
 - CsvSource: reference S1 (CsvSourceDriver.php:39-72) — header row,
   streamed records; an empty or header-only file is an invalid source.
 - ParquetSource: the native columnar path (what the 100 TB deployment
-  actually reads); predicate/column pushdown are free via Catalyst.
+  actually reads); predicate/column pushdown are free via Catalyst, and
+  the schema comes from a footer read on the driver, not a Spark job.
 - JsonSource: line-delimited JSON, beyond-reference convenience.
 """
 
@@ -43,12 +44,49 @@ class CsvSource:
         return df
 
 
+def _footer_schema(spark: SparkSession, path: str):
+    """The data schema Spark infers for ``path`` (a file, directory or
+    glob), read from the first data file's footer on the driver with
+    Spark's own converter: a bare ``spark.read.parquet`` launches one
+    schema-inference job to read that footer. Directory scans skip
+    Spark's hidden names; partition columns are the reader's to add."""
+    import json
+
+    from pyspark.sql.types import StructType
+
+    jvm = spark._jvm
+    conf = spark._jsc.hadoopConfiguration()
+    hpath = jvm.org.apache.hadoop.fs.Path(path)
+    fs = hpath.getFileSystem(conf)
+    pending = list(fs.globStatus(hpath) or [])
+    while pending:
+        status = pending.pop(0)
+        if status.isDirectory():
+            names = {c.getPath().getName(): c for c in fs.listStatus(status.getPath())}
+            pending[:0] = [
+                names[n] for n in sorted(names)
+                if not (n.startswith(".") or (n.startswith("_") and "=" not in n))
+            ]
+            continue
+        footer = jvm.org.apache.parquet.hadoop.Footer(
+            status.getPath(),
+            jvm.org.apache.parquet.hadoop.ParquetFileReader.readFooter(conf, status.getPath()),
+        )
+        spark_parquet = jvm.org.apache.spark.sql.execution.datasources.parquet
+        schema = spark_parquet.ParquetFileFormat.readSchemaFromFooter(
+            footer,
+            spark_parquet.ParquetToSparkSchemaConverter(spark._jsparkSession.sessionState().conf()),
+        )
+        return StructType.fromJson(json.loads(schema.json()))
+    raise InvalidSourceError(f"no parquet data file at {path}")
+
+
 class ParquetSource:
     def __init__(self, path: str):
         self.path = path
 
     def load(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(self.path)
+        return spark.read.schema(_footer_schema(spark, self.path)).parquet(self.path)
 
 
 class JsonSource:

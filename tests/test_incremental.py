@@ -3,19 +3,27 @@
 The scale contract under test: after a full first run, a re-run with
 no source drift writes NOTHING (destination version does not advance),
 and a re-run with k changed rows merges exactly those k — while orphan
-detection still sees the full entity set.
+detection still sees the full entity set. Change is judged against the
+row the destination holds; the mapping table is written only for keys
+that are new, stubs, or re-pointed.
 """
 
 import dataclasses
+import os
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
 from a2b_spark.core.migration import IdField, Migration
 from a2b_spark.exec.executor import run_migration
-from a2b_spark.mapping.store import MappingStore
+from a2b_spark.exec.references import ensure_stubs
+from a2b_spark.mapping.store import MappingStore, STATUS_MIGRATED
 from a2b_spark.sinks.parquet import ParquetDestination
+from a2b_spark.sinks.yaml_dir import YamlDirDestination
 from a2b_spark.sources.base import DataFrameSource
+
+HIDDEN = {"__snapshot", "__mapped", "__changed", "__unmapped", "__src__", "row_hash"}
 
 
 def _mig(src_df, dest_path):
@@ -96,16 +104,156 @@ def test_null_flip_between_columns_is_a_change(spark, tmp_path):
     assert r.rows_written == 1
 
 
-def test_legacy_mapping_table_backfills_hashes(spark, base):
-    """A mapping table written by a non-incremental run has no hashes:
-    the first incremental run rewrites everything once, the second
-    writes nothing."""
+def test_microsecond_timestamp_change_is_a_change(spark, tmp_path):
+    """A timestamp (with or without time zone) that moves by one
+    microsecond is a change: the canonical JSON keeps microseconds."""
+    import datetime as dt
+
+    mapper = MappingStore(spark, str(tmp_path / "maps"))
+    dest = str(tmp_path / "dest")
+
+    def mk(t, n):
+        at = [dt.datetime(2020, 1, 1, 0, 0, 0, us) for us in (t, n)]
+        df = spark.createDataFrame([(1, *at)], "c_custkey long, t timestamp, n timestamp_ntz")
+        return Migration(
+            name="inc",
+            source=DataFrameSource(df),
+            destination=ParquetDestination(dest, key_cols=("id",)),
+            source_ids=(IdField("c_custkey", "int"),),
+            destination_ids=(IdField("id", "int"),),
+            transform=lambda d: d.select("__src__", "__dest_id", "t", "n"),
+        )
+
+    written = [
+        run_migration(spark, mk(t, n), mapper, incremental=True).rows_written
+        for t, n in [(1, 1), (2, 1), (2, 2), (2, 2)]
+    ]
+    assert written == [1, 1, 1, 0]
+    assert mk(2, 2).destination.read_snapshot(spark).first().n.microsecond == 2
+
+
+def _mapping(spark, m, mapper):
+    """key -> (dest id, status), after checking the ids agree with the
+    destination's."""
+    rows = mapper.load(m.mapping_key(), m.source_ids, m.destination_ids).collect()
+    ids = {r.c_custkey: r.id for r in m.destination.read_snapshot(spark).collect()}
+    assert {r.source_c_custkey: r.dest_id for r in rows} == ids
+    return {r.source_c_custkey: (r.dest_id, r.status) for r in rows}
+
+
+def test_legacy_mapping_table_with_row_hash_loads(spark, base):
+    """A mapping table that still carries the ``row_hash`` column of the
+    earlier stored-hash change test (here: after a non-incremental run)
+    loads without it; the incremental run writes only the key it has
+    not seen, and the next run writes nothing."""
     src, mapper, dest = base
-    run_migration(spark, _mig(src, dest), mapper)  # legacy, no hashes
-    r1 = run_migration(spark, _mig(src, dest), mapper, incremental=True)
-    assert r1.rows_written == 20  # backfill pass
+    m = _mig(src, dest)
+    run_migration(spark, _mig(src.orderBy("c_custkey").limit(19), dest), mapper)
+    table = mapper.table(m.mapping_key(), m.source_ids, m.destination_ids)
+    table.overwrite(table.read(spark).withColumn("row_hash", F.lit(7).cast("long")))
+    assert "row_hash" not in mapper.load(m.mapping_key(), m.source_ids, m.destination_ids).columns
+    r1 = run_migration(spark, m, mapper, incremental=True)
+    assert (r1.rows_written, r1.rows_unchanged) == (1, 19)
+    maps = _mapping(spark, m, mapper)
+    assert len(maps) == 20 and {s for _, s in maps.values()} == {STATUS_MIGRATED}
+    v = table.current_version()
     r2 = run_migration(spark, _mig(src, dest), mapper, incremental=True)
     assert r2.rows_written == 0
+    assert table.current_version() == v
+    assert not HIDDEN & set(m.destination.read_snapshot(spark).columns)
+
+
+def test_update_only_rerun_makes_no_mapping_commit(spark, base):
+    """Rows that change but are already mapped rewrite the destination
+    only: the mapping table's version does not move."""
+    src, mapper, dest = base
+    m = _mig(src, dest)
+    run_migration(spark, m, mapper, incremental=True)
+    table = mapper.table(m.mapping_key(), m.source_ids, m.destination_ids)
+    v, maps = table.current_version(), _mapping(spark, m, mapper)
+    drifted = src.withColumn("c_name", F.concat("c_name", F.lit("!")))
+    r = run_migration(spark, _mig(drifted, dest), mapper, incremental=True)
+    assert r.rows_written == 20
+    assert table.current_version() == v
+    assert _mapping(spark, m, mapper) == maps
+
+
+def test_stub_promoted_to_migrated(spark, base):
+    """A key first mapped as a stub is promoted to STATUS_MIGRATED by
+    the incremental run that migrates it, under the stub's id; the next
+    run writes nothing and makes no mapping commit."""
+    src, mapper, dest = base
+    m = _mig(src, dest)
+    stubbed = src.orderBy("c_custkey").limit(3).select("c_custkey")
+    assert ensure_stubs(spark, m, mapper, stubbed) == 3
+    stubs = {
+        r.source_c_custkey: r.dest_id
+        for r in mapper.load(m.mapping_key(), m.source_ids, m.destination_ids).collect()
+    }
+    r = run_migration(spark, m, mapper, incremental=True)
+    assert r.rows_written == 20
+    maps = _mapping(spark, m, mapper)
+    assert {s for _, s in maps.values()} == {STATUS_MIGRATED}
+    assert {k: maps[k][0] for k in stubs} == stubs
+    table = mapper.table(m.mapping_key(), m.source_ids, m.destination_ids)
+    v = table.current_version()
+    assert run_migration(spark, _mig(src, dest), mapper, incremental=True).rows_written == 0
+    assert table.current_version() == v
+
+
+def test_prune_only_rerun_commits_no_data_file(spark, base):
+    """An incremental prune re-run with orphans and no changed rows is
+    one destination commit that links the base files and writes no
+    (empty) data file; the mapping table does not move."""
+    src, mapper, dest = base
+    m = _mig(src.repartition(2), dest)
+    run_migration(spark, m, mapper, incremental=True)
+    table = mapper.table(m.mapping_key(), m.source_ids, m.destination_ids)
+    dv, mv = m.destination.table.current_version(), table.current_version()
+    r = run_migration(
+        spark, _mig(src.orderBy("c_custkey").limit(19), dest), mapper,
+        orphan_policy="prune", incremental=True,
+    )
+    assert (r.rows_written, r.orphan_count) == (0, 1)
+    assert table.current_version() == mv
+    new = m.destination.table.current_version()
+    assert new != dv
+    vdir = os.path.join(dest, new)
+    files = [
+        os.path.join(root, f)
+        for root, _, names in os.walk(vdir)
+        for f in names
+        if f.endswith(".parquet") and "_dv" not in root
+    ]
+    assert files
+    assert all(pq.ParquetFile(f).metadata.num_rows > 0 for f in files)
+    assert all(os.stat(f).st_nlink > 1 for f in files)  # linked, none new
+    assert m.destination.read_snapshot(spark).count() == 19
+
+
+def test_yaml_dir_unchanged_rerun_writes_nothing(spark, tmp_path, sf_dir):
+    """A YAML-directory destination reads back its own types: an
+    incremental re-run over unchanged input writes nothing."""
+    nations = spark.read.parquet(f"{sf_dir}/nation.parquet")
+    dest = YamlDirDestination(str(tmp_path / "yaml"), (IdField("id", "string"),))
+    mapper = MappingStore(spark, str(tmp_path / "maps"))
+
+    def mk():
+        return Migration(
+            name="to_yaml",
+            source=DataFrameSource(nations),
+            destination=dest,
+            source_ids=(IdField("n_nationkey", "int"),),
+            destination_ids=(IdField("id", "string"),),
+            transform=lambda d: d.select(
+                "__src__", "__dest_id", "n_nationkey", "n_regionkey", "n_name"
+            ),
+        )
+
+    n = nations.count()
+    assert run_migration(spark, mk(), mapper, incremental=True).rows_written == n
+    r = run_migration(spark, mk(), mapper, incremental=True)
+    assert (r.rows_written, r.rows_unchanged) == (0, n)
 
 
 def test_incremental_orphans_still_detected(spark, base):
@@ -129,10 +277,10 @@ def test_incremental_requires_mappings(spark, base):
 
 
 def test_passthrough_transform_stays_clean(spark, base):
-    """A contract-legal pass-through transform must not leak the
-    mapping table's stored row_hash into the entity (round-6 review:
-    it polluted the destination schema AND made every re-run rewrite
-    everything because the stale hash joined the payload)."""
+    """A contract-legal pass-through transform must not leak mapping
+    columns, hidden ``__src__`` fields or the executor's flags into the
+    entity: they would pollute the destination schema AND make every
+    re-run rewrite everything by joining the payload."""
     src, mapper, dest = base
 
     def mk():
@@ -150,14 +298,15 @@ def test_passthrough_transform_stays_clean(spark, base):
     r2 = run_migration(spark, mk(), mapper, incremental=True)
     assert r2.rows_written == 0
     assert r2.rows_unchanged == 20
-    assert "row_hash" not in mk().destination.read_snapshot(spark).columns
+    cols = mk().destination.read_snapshot(spark).columns
+    assert not (HIDDEN | {"status", "updated"}) & set(cols), cols
 
 
 def test_non_incremental_rewrite_invalidates_hash(spark, tmp_path):
     """Interleaving: incremental(A) -> NON-incremental(B) ->
     incremental(A again). The middle run rewrote the destination to B,
-    so the final run MUST write A (round-6 review: a stale stored
-    hash made it silently skip, leaving B in the destination)."""
+    so the final run MUST write A (a stored hash of A once made it
+    silently skip, leaving B in the destination)."""
     mapper = MappingStore(spark, str(tmp_path / "maps"))
     dest = str(tmp_path / "dest")
 
@@ -181,10 +330,10 @@ def test_non_incremental_rewrite_invalidates_hash(spark, tmp_path):
 
 def test_rebuilt_src_struct_rewrites_once_then_skips(spark, base):
     """A transform that rebuilds ``__src__`` from the id columns drops
-    the stored hash riding in it: that run treats every row as changed,
-    writes it once and backfills the hashes; the next unchanged run
-    with a struct-keeping transform writes nothing, and the hidden
-    field never reaches the destination."""
+    the hidden fields riding in it: that run treats every row as
+    changed and unmapped, writes it once and leaves the mapping as it
+    was; the next unchanged run with a struct-keeping transform writes
+    nothing, and no hidden field reaches the destination."""
     src, mapper, dest = base
 
     def rebuilt(df):
@@ -200,9 +349,10 @@ def test_rebuilt_src_struct_rewrites_once_then_skips(spark, base):
     )
     assert (r.rows_written, r.rows_unchanged) == (20, 0)
     m = _mig(src, dest)
-    hashes = mapper.load(m.mapping_key(), m.source_ids, m.destination_ids)
-    assert hashes.filter(F.col("row_hash").isNull()).count() == 0
+    maps = _mapping(spark, m, mapper)
+    assert len(maps) == 20 and {s for _, s in maps.values()} == {STATUS_MIGRATED}
     r = run_migration(spark, _mig(src, dest), mapper, incremental=True)
     assert (r.rows_written, r.rows_unchanged) == (0, 20)
+    assert _mapping(spark, m, mapper) == maps
     cols = m.destination.read_snapshot(spark).columns
-    assert not {"__prev_hash", "row_hash", "__src__"} & set(cols), cols
+    assert not HIDDEN & set(cols), cols

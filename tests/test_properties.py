@@ -399,12 +399,9 @@ def test_incremental_matches_model_over_random_histories(spark, tmp_path_factory
     """Random interleavings of incremental and full runs over drifting
     sources: the destination always equals the dict model (last run's
     source wins), and an incremental run writes exactly the rows whose
-    payload differs from the last VALID stored hash. Full runs NULL
-    the stored hash for every row they rewrite (executor contract:
-    a stale hash plus a content rollback would silently skip a row
-    the destination no longer holds), so the model tracks hash
-    validity separately from destination content: a key last touched
-    by a full run is always rewritten by the next incremental run."""
+    payload differs from what the destination holds — whichever kind
+    of run wrote it (a content rollback after a full run is written,
+    never skipped)."""
     from a2b_spark.core.migration import IdField, Migration
     from a2b_spark.exec.executor import run_migration
     from a2b_spark.mapping.store import MappingStore
@@ -415,9 +412,8 @@ def test_incremental_matches_model_over_random_histories(spark, tmp_path_factory
     mapper = MappingStore(spark, str(base / "maps"))
     dest_path = str(base / "dest")
 
-    _NO_HASH = object()  # full run touched it (hash NULLed) — always rewritten
+    _ABSENT = object()  # never migrated — always written
     last_migrated: dict = {}  # key -> payload as of the last run that saw it
-    hashed: dict = {}  # key -> payload covered by a VALID stored hash
     for incremental, source in history:
         df = spark.createDataFrame(
             [(k, v) for k, v in source.items()], "c_custkey long, v string"
@@ -433,14 +429,12 @@ def test_incremental_matches_model_over_random_histories(spark, tmp_path_factory
         r = run_migration(spark, m, mapper, incremental=incremental)
         if incremental:
             expect_written = sum(
-                1 for k, v in source.items() if hashed.get(k, _NO_HASH) != v
+                1 for k, v in source.items() if last_migrated.get(k, _ABSENT) != v
             )
             assert r.rows_written == expect_written
             assert r.rows_unchanged == len(source) - expect_written
-            hashed.update(source)  # skipped rows already held hash == v
         else:
             assert r.rows_written == len(source)
-            hashed.update({k: _NO_HASH for k in source})
         last_migrated.update(source)
         # the destination holds the latest payload for every key ever seen
         snap = {

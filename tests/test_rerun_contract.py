@@ -2,7 +2,8 @@
 "prune"``: a re-run over drifted sources gives the destination and
 mapping a clean run would give — including rows that were pruned, or
 deleted out of band, and then come back with unchanged content, and
-after a crash inside or between the commits of one run."""
+after a crash inside or between the commits of one run, whatever the
+source does next."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -67,8 +68,7 @@ def _state(spark, root):
         m.mapping_key(), m.source_ids, m.destination_ids
     )
     maps = sorted(
-        (r.source_c_custkey, r.dest_id, r.row_hash, r.status)
-        for r in mapping.collect()
+        (r.source_c_custkey, r.dest_id, r.status) for r in mapping.collect()
     )
     return dest, maps
 
@@ -98,8 +98,8 @@ def test_pruned_rows_return_under_incremental_prune(spark, tmp_path, versions):
 def test_row_deleted_out_of_band_comes_back(spark, tmp_path, versions):
     """A destination row removed behind the migration's back is
     re-inserted under its old id by the next incremental run over the
-    unchanged source: its stored hash counts only while the destination
-    holds the row."""
+    unchanged source: change is judged against the row the destination
+    holds, and it holds none."""
     v, _ = versions
     root = str(tmp_path / "t")
     _run(spark, v["A"], root)
@@ -119,15 +119,15 @@ def test_crash_between_commits_converges(
 ):
     """A torn destination commit (staged, never claimed) or a crash
     after the run's only destination commit, before the mapping merge
-    (pruned rows gone, their stored hashes intact): the next run over
-    the same source reaches the clean run's state, and so does the run
-    after it."""
+    of the keys it restores: the next run over the same source reaches
+    the clean run's state, and so does the run after it. The crashed
+    run goes B -> A, so it has keys to map."""
     v, _ = versions
     clean, crashed = str(tmp_path / "clean"), str(tmp_path / "crashed")
     for root in (clean, crashed):
-        _run(spark, v["A"], root)
-    _run(spark, v["B"], clean)
-    table = _mig(v["B"], crashed).destination.table
+        _run(spark, v["B"], root)
+    _run(spark, v["A"], clean)
+    table = _mig(v["A"], crashed).destination.table
     before = table.current_version()
 
     def boom(*_a, **_k):
@@ -144,13 +144,53 @@ def test_crash_between_commits_converges(
 
         monkeypatch.setattr(VersionedParquetTable, "_commit_linked_files", torn)
     with pytest.raises(RuntimeError, match="injected crash"):
-        _run(spark, v["B"], crashed)
+        _run(spark, v["A"], crashed)
     monkeypatch.undo()
     # a torn commit never becomes visible; the mapping crash follows
     # the run's only destination commit
     assert (table.current_version() == before) == (crash_at == "dest_commit")
-    _run(spark, v["B"], crashed)
+    _run(spark, v["A"], crashed)
     assert _state(spark, crashed) == _state(spark, clean)
     for root in (clean, crashed):
-        _run(spark, v["A"], root)
+        _run(spark, v["B"], root)
     assert _state(spark, crashed) == _state(spark, clean)
+
+
+def test_crash_after_destination_commit_then_rollback(spark, tmp_path, monkeypatch):
+    """Ten rows X; a run that turns row 0 into Y crashes right after its
+    destination commit; an incremental run over X must write row 0
+    back: nothing beside the destination may claim it still holds X."""
+    root = str(tmp_path / "t")
+    x = spark.createDataFrame([(k, "x") for k in range(10)], "k long, v string")
+    y = x.withColumn("v", F.when(F.col("k") == 0, "y").otherwise(F.col("v")))
+
+    def mig(src):
+        return Migration(
+            name="rollback",
+            source=DataFrameSource(src),
+            destination=ParquetDestination(f"{root}/dest", key_cols=("id",)),
+            source_ids=(IdField("k", "int"),),
+            destination_ids=(IdField("id", "int"),),
+            transform=lambda df: df.select("__src__", "__dest_id", "k", "v"),
+        )
+
+    def run(src):
+        return run_migration(
+            spark, mig(src), MappingStore(spark, f"{root}/maps"), incremental=True
+        )
+
+    run(x)
+    merge = ParquetDestination.merge
+
+    def merge_then_crash(self, *a, **k):
+        merge(self, *a, **k)
+        raise RuntimeError("injected crash")
+
+    monkeypatch.setattr(ParquetDestination, "merge", merge_then_crash)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        run(y)
+    monkeypatch.undo()
+    assert {r.k: r.v for r in mig(x).destination.read_snapshot(spark).collect()}[0] == "y"
+    assert run(x).rows_written == 1
+    dest = {r.k: r.v for r in mig(x).destination.read_snapshot(spark).collect()}
+    assert dest == {k: "x" for k in range(10)}

@@ -379,8 +379,9 @@ FRESH_RUN_JOBS = 4
 UNCHANGED_RERUN_JOBS = 7
 # an incremental prune re-run that drops one row and updates one, on a
 # merge-on-read destination: the prune rides the destination merge's
-# commit, so a separate delete commit fails here
-PRUNE_RERUN_JOBS = 17
+# commit, and the updated row is already mapped, so a separate delete
+# commit or a mapping merge fails here
+PRUNE_RERUN_JOBS = 13
 JOB_HEADROOM = 2
 
 
@@ -401,8 +402,8 @@ def test_job_budget_fresh_and_unchanged_rerun(spark, tmp_path, sf_dir):
 
 
 def test_job_budget_prune_rerun(spark, tmp_path, sf_dir):
-    """An incremental prune re-run commits its destination once: no
-    separate delete commit, no mapping read to null pruned hashes."""
+    """An incremental prune re-run commits its destination once and
+    its mapping never: no separate delete commit, no mapping merge."""
     # two source partitions -> two destination files whose hashed-id
     # bands overlap, so the re-run merges merge-on-read
     a = (

@@ -3,6 +3,7 @@
 YAML destination round trip (incl. nested payloads), CSV destination
 atomic keyed merges, and full migrations through each."""
 
+import glob
 import os
 
 import pytest
@@ -14,7 +15,7 @@ from a2b_spark.mapping.store import MappingStore
 from a2b_spark.sinks.csv import CsvDestination
 from a2b_spark.sinks.yaml_dir import YamlDirDestination
 from a2b_spark.sources.base import DataFrameSource
-from a2b_spark.sources.files import InvalidSourceError
+from a2b_spark.sources.files import InvalidSourceError, ParquetSource
 from a2b_spark.sources.yaml_dir import YamlDirSource
 
 
@@ -349,3 +350,28 @@ def test_orc_destination_keyed_merge_roundtrip(spark, tmp_path, sf_dir):
     assert isinstance(src, OrcSource)
     back = src.load(spark)
     assert dict(back.dtypes)["v"] == "double" and back.count() == 3
+
+
+def _job_id(spark) -> int:
+    return int(spark.sparkContext._jsc.sc().dagScheduler().nextJobId())
+
+
+def test_parquet_source_schema_from_footer(spark, tmp_path, sf_dir):
+    """ParquetSource takes the schema from the footer on the driver: it
+    equals what Spark infers (decimal, date, string, nested columns),
+    for single files, a written directory, a partitioned directory and
+    a glob, and loading launches no job."""
+    bench = os.path.join(os.path.dirname(os.path.dirname(__file__)), "perfbench", "data")
+    paths = sorted(glob.glob(f"{sf_dir}/*.parquet") + glob.glob(f"{bench}/sf0.01/*.parquet"))
+    assert len(paths) >= 20
+    df = spark.read.parquet(paths[0]).selectExpr("*", "cast(rand(7) * 2 AS int) AS part")
+    df.write.parquet(str(tmp_path / "dir"))
+    df.write.partitionBy("part").parquet(str(tmp_path / "parted"))
+    paths += [str(tmp_path / "dir"), str(tmp_path / "parted"), f"{bench}/sf0.01/[nr]*.parquet"]
+    for path in paths:
+        before = _job_id(spark)
+        schema = ParquetSource(path).load(spark).schema
+        assert _job_id(spark) == before, path
+        assert schema == spark.read.parquet(path).schema, path
+    with pytest.raises(InvalidSourceError):
+        ParquetSource(str(tmp_path / "missing")).load(spark)
