@@ -334,7 +334,9 @@ def run_migration(
     The destination row arrives with prepare()'s snapshot join inside
     ``__src__``, so the skip is a flag on the persisted entity; no
     content hash is stored anywhere. Orphan detection still sees the
-    full entity set, so prune/preserve/report are unaffected.
+    full entity set, so prune/preserve/report are unaffected. The skip
+    needs a sink that reads back what it was given (README lists them);
+    the console sink keeps no snapshot, so it writes every row.
     ``rows_written`` counts rows actually merged; content-identical
     rows are reported separately in ``rows_unchanged``
     (``rows_skipped`` stays rows_in − rows_written: transform-filtered
@@ -417,7 +419,7 @@ def run_migration(
                 delete=orphan_ids if prune else None,
             )
         elif prune:
-            # nothing to upsert: a delete commits no data files
+            # nothing to upsert: the delete alone, on every sink
             m.destination.delete_keys(orphan_ids)
         if record_mappings and rows_unmapped:
             mb = mapping_batch(

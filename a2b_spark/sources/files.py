@@ -49,11 +49,16 @@ def _footer_schema(spark: SparkSession, path: str):
     glob), read from the first data file's footer on the driver with
     Spark's own converter: a bare ``spark.read.parquet`` launches one
     schema-inference job to read that footer. Directory scans skip
-    Spark's hidden names; partition columns are the reader's to add."""
+    Spark's hidden names; partition columns are the reader's to add.
+    None where Spark reads more than that one footer: schema merging
+    on, or a ``_common_metadata``/``_metadata`` summary file, which it
+    prefers."""
     import json
 
     from pyspark.sql.types import StructType
 
+    if spark.conf.get("spark.sql.parquet.mergeSchema", "false").lower() == "true":
+        return None
     jvm = spark._jvm
     conf = spark._jsc.hadoopConfiguration()
     hpath = jvm.org.apache.hadoop.fs.Path(path)
@@ -63,6 +68,8 @@ def _footer_schema(spark: SparkSession, path: str):
         status = pending.pop(0)
         if status.isDirectory():
             names = {c.getPath().getName(): c for c in fs.listStatus(status.getPath())}
+            if names.keys() & {"_common_metadata", "_metadata"}:
+                return None
             pending[:0] = [
                 names[n] for n in sorted(names)
                 if not (n.startswith(".") or (n.startswith("_") and "=" not in n))
@@ -86,7 +93,9 @@ class ParquetSource:
         self.path = path
 
     def load(self, spark: SparkSession) -> DataFrame:
-        return spark.read.schema(_footer_schema(spark, self.path)).parquet(self.path)
+        schema = _footer_schema(spark, self.path)
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        return reader.parquet(self.path)
 
 
 class JsonSource:

@@ -134,12 +134,19 @@ class ConcurrentWriteError(RuntimeError):
     uncommitted orphan for vacuum); retry re-reads the new current."""
 
 # per-format reader/writer options (CSV mirrors the reference's
-# header-row convention, CsvSourceDriver.php:39-72)
+# header-row convention, CsvSourceDriver.php:39-72). Text formats write
+# timestamps to the microsecond (Spark's default keeps milliseconds, so
+# a table would not read back what it was given); the fraction is
+# optional, so tables written with the default still parse.
+_TEXT_TIMESTAMPS = {
+    "timestampFormat": "yyyy-MM-dd'T'HH:mm:ss[.SSSSSS][XXX]",
+    "timestampNTZFormat": "yyyy-MM-dd'T'HH:mm:ss[.SSSSSS]",
+}
 _FORMAT_OPTIONS: dict[str, dict[str, str]] = {
     "parquet": {},
     "orc": {},  # columnar alternative; schema-carrying like parquet
-    "csv": {"header": "true"},
-    "json": {},
+    "csv": {"header": "true", **_TEXT_TIMESTAMPS},
+    "json": dict(_TEXT_TIMESTAMPS),
 }
 
 
@@ -2484,6 +2491,8 @@ class VersionedParquetTable:
             except ConstraintViolation:
                 shutil.rmtree(tmp_target, ignore_errors=True)
                 raise
+            if keep_rels:
+                self._drop_empty_write(tmp_target)
         self._write_cdf(tmp_target, cdf_df)
         self._write_added_sidecar(tmp_target)  # before the hardlinks
         for rel in keep_rels:
@@ -2503,6 +2512,32 @@ class VersionedParquetTable:
         self._stage_dv(tmp_target, old_dir, dv_new)
         self._claim_version_dir(tmp_target, version)
         self._commit(version, base=base)
+
+    def _drop_empty_write(self, tmp_target: str) -> None:
+        """Spark's writer stages one 0-row part file for an empty frame
+        (it keeps the schema that way). Where linked files and the
+        ``_SCHEMA`` sidecar carry the schema, remove it: an empty batch
+        adds no data file. One footer read, only when the write staged
+        exactly one file — an empty frame never stages more."""
+        from a2b_spark.storage import stats as _stats
+
+        staged = _stats._data_files(tmp_target)
+        if len(staged) != 1:
+            return
+        path = os.path.join(tmp_target, staged[0])
+        if self.fmt == "parquet":
+            import pyarrow.parquet as pq
+
+            rows = pq.read_metadata(path).num_rows
+        else:
+            import pyarrow.orc as orc
+
+            rows = orc.ORCFile(path).nrows
+        if rows == 0:
+            head, name = os.path.split(path)
+            for fn in (name, f".{name}.crc"):
+                if os.path.exists(os.path.join(head, fn)):
+                    os.remove(os.path.join(head, fn))
 
     def _stage_dv(self, tmp_target: str, src_vdir: Optional[str], dv_new=None) -> None:
         """Stage the staged version's deletion vector AFTER its data

@@ -19,6 +19,8 @@ from a2b_spark.core.migration import IdField, Migration
 from a2b_spark.exec.executor import run_migration
 from a2b_spark.exec.references import ensure_stubs
 from a2b_spark.mapping.store import MappingStore, STATUS_MIGRATED
+from a2b_spark.sinks.csv import CsvDestination
+from a2b_spark.sinks.jsonl import JsonlDestination
 from a2b_spark.sinks.parquet import ParquetDestination
 from a2b_spark.sinks.yaml_dir import YamlDirDestination
 from a2b_spark.sources.base import DataFrameSource
@@ -218,7 +220,29 @@ def test_prune_only_rerun_commits_no_data_file(spark, base):
     assert table.current_version() == mv
     new = m.destination.table.current_version()
     assert new != dv
-    vdir = os.path.join(dest, new)
+    _assert_only_linked_files(os.path.join(dest, new))
+    assert m.destination.read_snapshot(spark).count() == 19
+
+
+def test_empty_full_rerun_commits_no_data_file(spark, base):
+    """A non-incremental re-run whose transform filters every row merges
+    an empty batch: the commit links the base files and stages no
+    (empty) data file."""
+    src, mapper, dest = base
+    m = _mig(src.repartition(2), dest)
+    run_migration(spark, m, mapper)
+    dv = m.destination.table.current_version()
+    empty = dataclasses.replace(
+        m, transform=lambda df: m.transform(df).filter(F.col("c_custkey") < 0)
+    )
+    assert run_migration(spark, empty, mapper).rows_written == 0
+    new = m.destination.table.current_version()
+    assert new != dv
+    _assert_only_linked_files(os.path.join(dest, new))
+    assert m.destination.read_snapshot(spark).count() == 20
+
+
+def _assert_only_linked_files(vdir):
     files = [
         os.path.join(root, f)
         for root, _, names in os.walk(vdir)
@@ -228,7 +252,6 @@ def test_prune_only_rerun_commits_no_data_file(spark, base):
     assert files
     assert all(pq.ParquetFile(f).metadata.num_rows > 0 for f in files)
     assert all(os.stat(f).st_nlink > 1 for f in files)  # linked, none new
-    assert m.destination.read_snapshot(spark).count() == 19
 
 
 def test_yaml_dir_unchanged_rerun_writes_nothing(spark, tmp_path, sf_dir):
@@ -254,6 +277,34 @@ def test_yaml_dir_unchanged_rerun_writes_nothing(spark, tmp_path, sf_dir):
     assert run_migration(spark, mk(), mapper, incremental=True).rows_written == n
     r = run_migration(spark, mk(), mapper, incremental=True)
     assert (r.rows_written, r.rows_unchanged) == (0, n)
+
+
+@pytest.mark.parametrize("sink", [CsvDestination, JsonlDestination], ids=["csv", "jsonl"])
+def test_text_sink_unchanged_rerun_keeps_microseconds(spark, tmp_path, sink):
+    """CSV and JSONL tables write timestamps (with and without time
+    zone) to the microsecond, so they read back what was written: an
+    incremental re-run over unchanged input writes nothing."""
+    import datetime as dt
+
+    at = dt.datetime(2020, 1, 1, 0, 0, 0, 123456)
+    df = spark.createDataFrame(
+        [(k, at, at, 0.1 * k) for k in range(5)],
+        "c_custkey long, t timestamp, n timestamp_ntz, x double",
+    )
+    mapper = MappingStore(spark, str(tmp_path / "maps"))
+    m = Migration(
+        name="inc",
+        source=DataFrameSource(df),
+        destination=sink(str(tmp_path / "dest"), key_cols=("id",)),
+        source_ids=(IdField("c_custkey", "int"),),
+        destination_ids=(IdField("id", "int"),),
+        transform=lambda d: d.select("__src__", "__dest_id", "t", "n", "x"),
+    )
+    assert run_migration(spark, m, mapper, incremental=True).rows_written == 5
+    row = m.destination.read_snapshot(spark).first()
+    assert (row.t.microsecond, row.n) == (123456, at)
+    r = run_migration(spark, m, mapper, incremental=True)
+    assert (r.rows_written, r.rows_unchanged) == (0, 5)
 
 
 def test_incremental_orphans_still_detected(spark, base):

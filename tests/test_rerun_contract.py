@@ -113,46 +113,59 @@ def test_row_deleted_out_of_band_comes_back(spark, tmp_path, versions):
     assert _state(spark, root) == first
 
 
-@pytest.mark.parametrize("crash_at", ["dest_commit", "mapping_merge"])
+@pytest.mark.parametrize(
+    "crash_at, first, then",
+    [
+        pytest.param("dest_commit", "A", "B", id="dest_commit"),
+        pytest.param("mapping_merge", "B", "A", id="mapping_merge"),
+    ],
+)
 def test_crash_between_commits_converges(
-    spark, tmp_path, versions, monkeypatch, crash_at
+    spark, tmp_path, versions, monkeypatch, crash_at, first, then
 ):
     """A torn destination commit (staged, never claimed) or a crash
-    after the run's only destination commit, before the mapping merge
-    of the keys it restores: the next run over the same source reaches
-    the clean run's state, and so does the run after it. The crashed
-    run goes B -> A, so it has keys to map."""
+    after the run's only destination commit, before the mapping merge:
+    the next run over the same source reaches the clean run's state,
+    and so does the run after it. The torn run goes A -> B, so its one
+    merge-on-read commit carries the prune's deletes with the updates;
+    the mapping crash goes B -> A, so the run has keys to map."""
     v, _ = versions
     clean, crashed = str(tmp_path / "clean"), str(tmp_path / "crashed")
     for root in (clean, crashed):
-        _run(spark, v["B"], root)
-    _run(spark, v["A"], clean)
-    table = _mig(v["A"], crashed).destination.table
+        # two files whose hashed-id bands overlap: no file isolates a
+        # key, so the drift run merges on read in one commit
+        _run(spark, v[first].repartition(2), root)
+    _run(spark, v[then], clean)
+    table = _mig(v[then], crashed).destination.table
     before = table.current_version()
 
     def boom(*_a, **_k):
         raise RuntimeError("injected crash")
 
+    tombstones = []
     if crash_at == "mapping_merge":
         monkeypatch.setattr(MappingStore, "merge", boom)
     else:
         commit = VersionedParquetTable._commit_linked_files
 
         def torn(self, *a, **k):
+            tombstones.append(k["dv_new"].num_rows)
             monkeypatch.setattr(VersionedParquetTable, "_claim_version_dir", boom)
             commit(self, *a, **k)
 
         monkeypatch.setattr(VersionedParquetTable, "_commit_linked_files", torn)
     with pytest.raises(RuntimeError, match="injected crash"):
-        _run(spark, v["A"], crashed)
+        _run(spark, v[then], crashed)
     monkeypatch.undo()
+    # the torn commit tombstones the replaced and the pruned rows at once
+    assert tombstones == ([UPDATED + DROPPED] if crash_at == "dest_commit" else [])
     # a torn commit never becomes visible; the mapping crash follows
     # the run's only destination commit
     assert (table.current_version() == before) == (crash_at == "dest_commit")
-    _run(spark, v["A"], crashed)
+    _run(spark, v[then], crashed)
     assert _state(spark, crashed) == _state(spark, clean)
     for root in (clean, crashed):
-        _run(spark, v["B"], root)
+        _run(spark, v[first], root)
     assert _state(spark, crashed) == _state(spark, clean)
 
 

@@ -375,3 +375,34 @@ def test_parquet_source_schema_from_footer(spark, tmp_path, sf_dir):
         assert schema == spark.read.parquet(path).schema, path
     with pytest.raises(InvalidSourceError):
         ParquetSource(str(tmp_path / "missing")).load(spark)
+
+
+def test_parquet_source_schema_merged_or_summarized(spark, tmp_path):
+    """Where Spark reads more than one footer, ParquetSource infers as
+    Spark does: with ``spark.sql.parquet.mergeSchema`` on, a column only
+    a later file carries is kept; a ``_common_metadata`` summary file
+    wins over the data files' footers."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    merged = tmp_path / "merged"
+    spark.createDataFrame([(1,)], "a long").write.parquet(str(merged / "k=1"))
+    spark.createDataFrame([(2, "x")], "a long, b string").write.parquet(str(merged / "k=2"))
+    summarized = tmp_path / "summarized"
+    summarized.mkdir()
+    pq.write_table(pa.table({"a": [1]}), str(summarized / "part-0.parquet"))
+    pq.write_metadata(
+        pa.schema([("a", pa.int64()), ("c", pa.string())]),
+        str(summarized / "_common_metadata"),
+    )
+    assert "c" in spark.read.parquet(str(summarized)).columns
+    assert ParquetSource(str(summarized)).load(spark).schema == (
+        spark.read.parquet(str(summarized)).schema
+    )
+    spark.conf.set("spark.sql.parquet.mergeSchema", "true")
+    try:
+        schema = ParquetSource(str(merged)).load(spark).schema
+        assert schema == spark.read.parquet(str(merged)).schema
+    finally:
+        spark.conf.unset("spark.sql.parquet.mergeSchema")
+    assert {"a", "b", "k"} <= set(schema.fieldNames())
