@@ -312,6 +312,19 @@ def _persist_orphan_report(
     return report.read(spark)
 
 
+def _observed_count(obs, prepared: DataFrame) -> int:
+    """The ``rows_in`` the observation counted during the entity
+    materialization. A transform whose filter Catalyst folds to an
+    empty relation removes the observed node from the plan, and the
+    observation then holds no row: only that case pays a count job."""
+    from py4j.protocol import Py4JJavaError
+
+    try:
+        return int(obs.get["rows_in"])
+    except Py4JJavaError:
+        return prepared.count()
+
+
 def run_migration(
     spark: SparkSession,
     m: Migration,
@@ -369,13 +382,14 @@ def run_migration(
     # derive from the prepared DataFrame, which the transform contract
     # already guarantees.
     obs = None
+    observed = prepared
     if collect_stats:
         from pyspark.sql import Observation
 
         obs = Observation()
-        prepared = prepared.observe(obs, F.count(F.lit(1)).alias("rows_in"))
+        observed = prepared.observe(obs, F.count(F.lit(1)).alias("rows_in"))
 
-    entity = finalize_entity(m.transform(prepared), m)
+    entity = finalize_entity(m.transform(observed), m)
     # the flags replace the hidden fields before the cache: the cached
     # entity carries two booleans, not a copy of the destination row
     entity = entity.withColumns(
@@ -395,7 +409,7 @@ def run_migration(
         rows_processed, rows_written, rows_unmapped = entity.agg(
             F.count(F.lit(1)), F.count_if(CHANGED), F.count_if(UNMAPPED)
         ).first()
-        rows_in = int(obs.get["rows_in"]) if obs is not None else -1
+        rows_in = _observed_count(obs, prepared) if obs is not None else -1
 
         dest_names = [f.name for f in m.destination_ids]
 

@@ -261,9 +261,9 @@ def build_version_stats(
 ) -> dict:
     """Stats for every data file under ``version_dir``. Files that are
     HARDLINKS of a base-version file with the same relative path (same
-    inode — how _commit_touched reuses untouched partitions) copy the
-    base entry instead of re-reading the footer, so the cost of a
-    partitioned commit stays proportional to its new files.
+    inode — how a commit reuses the files it links) copy the base
+    entry instead of re-reading the footer, so the cost of a commit
+    stays proportional to its new files.
 
     ``batch_collector`` (callable ``(version_dir, rels) -> {rel:
     stats}``) replaces the per-file parquet footer read for formats

@@ -19,10 +19,15 @@ real table formats do:
   atomically. Concurrent readers see old-or-new, never a mix —
   the same all-or-nothing guarantee the reference gets from its
   tempfile+copy flush (CsvDestinationDriver.php:198-203).
-- Partitioned merges rewrite ONLY touched partitions and hard-link
-  the untouched partition files into the new version (metadata-only
-  copy, the local-FS analogue of Iceberg manifest reuse). Cost is
-  O(touched data + total file count), not O(table).
+- Every write commits through ONE primitive, ``_commit_version``: a
+  new version is linked files + new files + deletion vector +
+  sidecars. Overwrite links nothing; partitioned merges, appends and
+  deletes rewrite ONLY touched partitions and hard-link the other
+  partitions' files (metadata-only copy, the local-FS analogue of
+  Iceberg manifest reuse; O(touched data + total file count), not
+  O(table)); pruned merges and deletes link at file granularity;
+  restore, clone and the metadata commits link every file and write
+  none.
 - Keyed merges and deletes on an unpartitioned parquet/ORC table with
   ``deletion_vectors`` commit MERGE-ON-READ: the batch is written as
   new files, every base data file is hard-linked, and each matched old
@@ -32,7 +37,8 @@ real table formats do:
   O(changed rows), even when the ``_STATS`` key bands of hashed ids
   cannot prune any file. A file whose tombstoned share passes
   ``DV_FOLD_FRACTION`` is folded: its live rows ride the next merge's
-  new files and the file is dropped.
+  new files and the file is dropped. ``purge_deleted`` rewrites just
+  the files the vector names, partitioned or not.
 - ``vacuum`` trims old versions (default retention 3) at commit time.
 
 On a real cluster this module is the seam where Delta/Iceberg slots
@@ -211,11 +217,11 @@ class VersionedParquetTable:
         keyed merges into an unpartitioned table commit merge-on-read:
         data files hardlink, matched rows are tombstoned in the
         file-scoped vector (see the ``DV_DIR`` note), and a merge writes
-        only its batch. Partitioned commits carry the vector; a
-        partitioned merge rewrites a re-introduced key's stale partition;
-        append of a tombstoned key into a partitioned table fails loudly
-        (merge or purge first); ``purge_deleted`` rewrites only the files
-        (or partitions) that hold tombstoned bytes. Read-side application
+        only its batch. Partitioned commits carry the vector; a key
+        merged or appended back after its delete lands in a new file,
+        which its old entry never names, so it surfaces exactly once;
+        ``purge_deleted`` rewrites only the files that hold tombstoned
+        bytes. Read-side application
         is unconditional: any handle reading a version that carries a
         ``_dv/`` vector applies it, flag or not — correctness lives in
         the data, not the handle."""
@@ -354,10 +360,8 @@ class VersionedParquetTable:
         self, spark: SparkSession, version: Optional[str] = None
     ) -> Optional[DataFrame]:
         """:meth:`read` WITHOUT the deletion-vector anti join — the
-        PHYSICAL rows, tombstoned ones included. Internal: the
-        vector-maintenance paths (partitioned purge, merge
-        re-introduction) must locate where tombstoned bytes LIVE,
-        which the filtered read by definition cannot show."""
+        PHYSICAL rows, tombstoned ones included: what is on disk, which
+        the filtered read by definition cannot show."""
         v = version or self.current_version()
         if v is None:
             return None
@@ -519,22 +523,11 @@ class VersionedParquetTable:
         return out if keep_file else out.drop(DV_FILE)
 
     # ----------------------------------------------------- file skipping
-    def _write_added_sidecar(self, tmp_target: str) -> None:
-        """Record this commit's freshly-staged data files as the
-        ``ADDED`` JSON list — MUST run before the hardlink step of the
-        calling commit path (see the constant's note)."""
-        import json as _json
-
-        from a2b_spark.storage import stats as _stats
-
-        with open(os.path.join(tmp_target, ADDED), "w") as f:
-            f.write(_json.dumps(sorted(_stats._data_files(tmp_target))))
-
-    def _write_stats_sidecar(self, tmp_target: str, base: Optional[str]) -> None:
+    def _write_stats_sidecar(self, tmp_target: str, src_dir: Optional[str]) -> None:
         """Per-file min/max statistics (``_STATS``), parquet and ORC —
         written into the staging dir so it commits atomically with the
-        data. Hardlinked (untouched-partition) files reuse the base
-        version's entries by inode. New files pay a driver-side
+        data. Files hard-linked from ``src_dir`` reuse its entries by
+        inode. New files pay a driver-side
         footer-only read: parquet via pyarrow, ORC via the JVM ORC
         reader (``stats.collect_orc_footer_stats`` — zero Spark jobs;
         the round-13 per-commit distributed harvest cost one job per
@@ -562,12 +555,11 @@ class VersionedParquetTable:
                         return got
                 return _stats.collect_file_stats_spark(_spark, vdir, rels, _fmt)
 
-        base_dir = os.path.join(self.path, base) if base else None
-        base_stats = _stats.load_stats(base_dir) if base_dir else None
+        src_stats = _stats.load_stats(src_dir) if src_dir else None
         _stats.write_stats(
             tmp_target,
             _stats.build_version_stats(
-                tmp_target, base_dir, base_stats, batch_collector=collector
+                tmp_target, src_dir, src_stats, batch_collector=collector
             ),
         )
 
@@ -709,33 +701,6 @@ class VersionedParquetTable:
             )
         return df
 
-    def _carry_forward_metadata(self, target: str, base: Optional[str]) -> None:
-        """Copy top-level ``_``-prefixed metadata files from the base
-        version dir into the new one, unless the new version already
-        wrote its own. Application metadata committed via
-        ``extra_files`` (e.g. the streaming rollup's last-batch marker)
-        must SURVIVE unrelated commits — merge, delete, compact,
-        retract — or a restarted stream sees no marker and re-folds
-        already-applied batches (round-4 advice: double counting)."""
-        if not base:
-            return
-        base_dir = os.path.join(self.path, base)
-        if not os.path.isdir(base_dir):
-            return
-        from a2b_spark.storage.stats import STATS_FILE
-
-        for fn in os.listdir(base_dir):
-            src = os.path.join(base_dir, fn)
-            dst = os.path.join(target, fn)
-            if (
-                fn.startswith("_")
-                # per-version file maps, never inherited
-                and fn not in (STATS_FILE, ADDED)
-                and os.path.isfile(src)
-                and not os.path.exists(dst)
-            ):
-                shutil.copyfile(src, dst)
-
     def _claim_version_dir(self, tmp_target: str, version: str) -> str:
         """Atomically claim ``version``'s directory by renaming the
         uniquely-named staging dir into place. Two same-base writers
@@ -762,6 +727,113 @@ class VersionedParquetTable:
         return _json.dumps(
             {"op": op, "ts": datetime.datetime.now(datetime.timezone.utc).isoformat()}
         )
+
+    def _commit_version(
+        self,
+        df: Optional[DataFrame],
+        linked: Sequence[str],
+        src_dir: Optional[str],
+        op: str,
+        base: Optional[str],
+        cdf_df: Optional[DataFrame] = None,
+        dv_new=None,
+        sidecars: Optional[dict] = None,
+    ) -> None:
+        """THE commit of a table version: linked files + new files +
+        vector + sidecars, staged in a ``.tmp-*`` dir, then claimed and
+        flipped live in one step (see :meth:`_claim_version_dir`).
+
+        ``df`` holds the rows of the new files (None: no new file); a
+        partitioned table writes it partitioned. ``linked``: relative
+        data-file paths hard-linked from ``src_dir``, the version the
+        new one is built from (another table's, for a clone); their
+        ``_STATS`` entries are reused by inode, and ``src_dir``'s
+        deletion vector carries for them, plus ``dv_new`` (pyarrow
+        ``(DV_FILE, *key_cols)`` entries). ``src_dir``'s metadata
+        sidecars carry forward unless ``sidecars`` replaces them
+        ({filename: text, or None to omit}); ``_DROPPED`` carries only
+        while files are linked, since only linked files can hold
+        dropped columns' bytes. ``base``: the version the content
+        derives from, checked at the flip (see :meth:`_commit`).
+        ``cdf_df``: this commit's change rows; on a CDF-enabled table
+        they default to a keyed diff of ``df`` against the base rows
+        outside the linked files. CHECK constraints ride the staging
+        write (layout-only ops rewrite validated rows and skip them)
+        and are verified before anything is linked or flipped."""
+        import json as _json
+
+        from a2b_spark.storage import stats as _stats
+
+        sidecars = dict(sidecars or {})
+        version = self._next_version()
+        tmp_target = os.path.join(self.path, f".tmp-{uuid.uuid4().hex}")
+        if df is None:
+            os.makedirs(tmp_target)
+        else:
+            stale = (
+                self._dropped_tombstones(base) & set(df.columns) if linked else ()
+            )
+            if stale:
+                # merge/append escalate to a full rewrite first: linked
+                # files would resurface the pre-drop values
+                raise ValueError(
+                    f"column(s) {sorted(stale)} were dropped and their physical "
+                    f"data survives in hardlinked files at {self.path}; "
+                    "re-introduce them via a full rewrite (overwrite/merge)"
+                )
+            check = lambda: None  # noqa: E731
+            if op not in LAYOUT_ONLY_OPS:
+                df, check = self._constraint_observation(df, base)
+            if cdf_df is None:
+                cdf_df = self._fallback_cdf(df, base, op, linked)
+            out = self._reject_null_partitions(df) if self.partition_by else df
+            writer = (
+                out.write.mode("overwrite").format(self.fmt)
+                .options(**_FORMAT_OPTIONS[self.fmt])
+            )
+            if self.partition_by:
+                writer = writer.partitionBy(*self.partition_by)
+            with _stats_friendly_timestamps(df.sparkSession):
+                writer.save(tmp_target)
+            try:  # BEFORE anything is linked or flipped
+                check()
+            except ConstraintViolation:
+                shutil.rmtree(tmp_target, ignore_errors=True)
+                raise
+            if linked:
+                self._drop_empty_write(tmp_target)
+            # per-VERSION schema sidecar, written for every format: a
+            # version holding zero rows may have no data file at all,
+            # and read() then falls back to a typed empty frame
+            sidecars[SCHEMA] = _json.dumps(df.schema.jsonValue())
+        self._write_cdf(tmp_target, cdf_df)
+        with open(os.path.join(tmp_target, ADDED), "w") as f:  # before the links
+            f.write(_json.dumps(_stats._data_files(tmp_target)))
+        for rel in linked:
+            dst = os.path.join(tmp_target, rel)
+            os.makedirs(os.path.dirname(dst), exist_ok=True)
+            os.link(os.path.join(src_dir, rel), dst)
+        sidecars[COMMIT_INFO] = self._commit_info(op)
+        for fn, content in sidecars.items():
+            if content is not None:
+                with open(os.path.join(tmp_target, fn), "w") as f:
+                    f.write(content)
+        self._write_stats_sidecar(tmp_target, src_dir)
+        # application metadata committed via ``extra_files`` (e.g. the
+        # streaming rollup's last-batch marker) must survive unrelated
+        # commits, or a restarted stream re-folds applied batches
+        skip = {_stats.STATS_FILE, ADDED, *sidecars} | (set() if linked else {DROPPED})
+        carried = os.listdir(src_dir) if src_dir and os.path.isdir(src_dir) else []
+        for fn in carried:
+            src, dst = os.path.join(src_dir, fn), os.path.join(tmp_target, fn)
+            if (
+                fn.startswith("_") and fn not in skip
+                and os.path.isfile(src) and not os.path.exists(dst)
+            ):
+                shutil.copyfile(src, dst)
+        self._stage_dv(tmp_target, src_dir if linked else None, dv_new)
+        self._claim_version_dir(tmp_target, version)
+        self._commit(version, base=base)
 
     def history(self) -> list[dict]:
         """Commit log of the retained versions, oldest → newest — the
@@ -857,6 +929,7 @@ class VersionedParquetTable:
             retention=self.retention,
             fmt=self.fmt,
             partitions_derived_from_keys=self.partitions_derived_from_keys,
+            deletion_vectors=self.deletion_vectors,
         )
         if dst.current_version() is not None:
             raise ValueError(f"clone target {dest_path} already has commits")
@@ -869,64 +942,22 @@ class VersionedParquetTable:
         src_version: str,
         op: str,
         base: Optional[str],
-        replace_files: Optional[dict] = None,
+        sidecars: Optional[dict] = None,
         src_root: Optional[str] = None,
         cdf_df: Optional[DataFrame] = None,
     ) -> None:
-        """Commit a new version whose DATA files hardlink
-        ``src_version``'s (metadata-only cost) and whose sidecars copy
-        from it, except the ones in ``replace_files`` ({filename:
-        content or None-to-omit}) — the machinery behind restore,
-        constraint metadata commits, and shallow clone
-        (``src_root`` points at the SOURCE table for cross-table
-        linking). ``cdf_df``: change rows of THIS commit (restore's
-        inverse diff); the source's own ``_cdf`` dir is never carried
-        over — change files describe one commit, not its data."""
-        replace = dict(replace_files or {})
-        src_dir = os.path.join(src_root or self.path, src_version)
-        new_version = self._next_version()
-        tmp_target = os.path.join(self.path, f".tmp-{uuid.uuid4().hex}")
-        os.makedirs(tmp_target)
-        for root, dirs, files in os.walk(src_dir):
-            # never descend into per-commit metadata dirs (_cdf):
-            # their contents are commit-scoped, not table content
-            from a2b_spark.storage.stats import keep_data_dir
+        """Commit a new version that links every data file of
+        ``src_version`` (``src_root``: the SOURCE table of a clone) and
+        writes no new file: restore, clone and the metadata commits.
+        ``sidecars`` replace the source's ({filename: text, or None to
+        omit}); ``cdf_df`` holds restore's inverse diff."""
+        from a2b_spark.storage import stats as _stats
 
-            dirs[:] = [d for d in dirs if keep_data_dir(d)]
-            rel_root = os.path.relpath(root, src_dir)
-            dst_root = (
-                tmp_target
-                if rel_root == "."
-                else os.path.join(tmp_target, rel_root)
-            )
-            os.makedirs(dst_root, exist_ok=True)
-            for fn in files:
-                src = os.path.join(root, fn)
-                dst = os.path.join(dst_root, fn)
-                if fn == COMMIT_INFO or fn == ADDED or (
-                    rel_root == "." and fn in replace
-                ):
-                    continue  # replaced (or re-labelled) below
-                if fn.startswith(("_", ".")):
-                    shutil.copyfile(src, dst)  # sidecars: small, own copy
-                else:
-                    os.link(src, dst)  # data: metadata-only reuse
-        for fn, content in replace.items():
-            if content is not None:
-                with open(os.path.join(tmp_target, fn), "w") as f:
-                    f.write(content)
-        # the deletion vector is SNAPSHOT state (unlike _cdf, which is
-        # commit-scoped): the hardlinked data files still hold the
-        # tombstoned bytes, so restore/clone/constraint commits must
-        # carry the source version's vector or those rows resurrect
-        self._stage_dv(tmp_target, src_dir)
-        self._write_cdf(tmp_target, cdf_df)
-        with open(os.path.join(tmp_target, ADDED), "w") as f:
-            f.write("[]")  # every data file hardlinks: no new bytes
-        with open(os.path.join(tmp_target, COMMIT_INFO), "w") as f:
-            f.write(self._commit_info(op))
-        self._claim_version_dir(tmp_target, new_version)
-        self._commit(new_version, base=base)
+        src_dir = os.path.join(src_root or self.path, src_version)
+        self._commit_version(
+            None, _stats._data_files(src_dir), src_dir, op, base,
+            cdf_df=cdf_df, sidecars=sidecars,
+        )
 
     # ------------------------------------------------------- constraints
     def constraints(self, version: Optional[str] = None) -> list[dict]:
@@ -980,7 +1011,7 @@ class VersionedParquetTable:
             cur,
             op="add_constraint",
             base=cur,
-            replace_files={
+            sidecars={
                 CONSTRAINTS: _json.dumps(cons + [{"name": name, "expr": expr}])
             },
         )
@@ -999,7 +1030,7 @@ class VersionedParquetTable:
             cur,
             op="drop_constraint",
             base=cur,
-            replace_files={
+            sidecars={
                 CONSTRAINTS: _json.dumps(remaining) if remaining else None
             },
         )
@@ -1077,7 +1108,7 @@ class VersionedParquetTable:
             cur,
             op="drop_columns",
             base=cur,
-            replace_files={
+            sidecars={
                 SCHEMA: _json.dumps(new_schema.jsonValue()),
                 DROPPED: _json.dumps(tombs),
             },
@@ -1130,7 +1161,7 @@ class VersionedParquetTable:
             cur,
             op="widen_column",
             base=cur,
-            replace_files={SCHEMA: _json.dumps(new_schema.jsonValue())},
+            sidecars={SCHEMA: _json.dumps(new_schema.jsonValue())},
         )
 
     # ------------------------------------------------- change data feed
@@ -1173,7 +1204,7 @@ class VersionedParquetTable:
             cur,
             op="enable_cdf",
             base=cur,
-            replace_files={CDF_ENABLED: "pre" if preimages else "1"},
+            sidecars={CDF_ENABLED: "pre" if preimages else "1"},
         )
 
     def cdf_preimages(self, version: Optional[str] = None) -> bool:
@@ -1196,7 +1227,7 @@ class VersionedParquetTable:
         if cur is None or not self.cdf_enabled(cur):
             return
         self._hardlink_commit(
-            cur, op="disable_cdf", base=cur, replace_files={CDF_ENABLED: None}
+            cur, op="disable_cdf", base=cur, sidecars={CDF_ENABLED: None}
         )
 
     def cdf_enabled(self, version: Optional[str] = None) -> bool:
@@ -1221,21 +1252,26 @@ class VersionedParquetTable:
             )
 
     def _fallback_cdf(
-        self, new_df: DataFrame, base: Optional[str], op: str,
-        touched: Optional[set] = None,
+        self, new_df: DataFrame, base: Optional[str], op: str, linked: Sequence[str]
     ) -> Optional[DataFrame]:
         """Change rows for a content commit whose caller did not build
-        them explicitly (overwrite/delete/restore/rollup paths): one
-        keyed diff of the new content against the base snapshot —
-        limited to the touched partitions when given (a partitioned
-        commit can only change rows there)."""
+        them explicitly (overwrite and rollup paths): one keyed diff of
+        the new rows against the base rows they replace — those outside
+        the ``linked`` files, which carry over unchanged."""
         if base is None or op in LAYOUT_ONLY_OPS or not self.cdf_enabled(base):
             return None
+        from a2b_spark.storage import stats as _stats
         from a2b_spark.storage.diff import keyed_changes
 
-        before = self.read(new_df.sparkSession, version=base)
-        if touched is not None:
-            before = before.filter(self._partition_filter(touched))
+        spark = new_df.sparkSession
+        before = self.read(spark, version=base)
+        if linked:
+            vdir, keep = os.path.join(self.path, base), set(linked)
+            before = self._scan_files(
+                spark, base,
+                [os.path.join(vdir, r) for r in _stats._data_files(vdir) if r not in keep],
+                self._version_schema(base),
+            )
         return keyed_changes(
             before, new_df, self.key_cols,
             preimages=self.cdf_preimages(base),
@@ -1302,7 +1338,10 @@ class VersionedParquetTable:
         base=_UNSET_BASE,
         cdf_df: Optional[DataFrame] = None,
     ) -> None:
-        """``extra_files``: {filename: text} written into the NEW
+        """Replace the table's content with ``df``: a full rewrite, so
+        the deletion vector and drop-column tombstones clear.
+
+        ``extra_files``: {filename: text} written into the NEW
         version directory BEFORE the commit flip — metadata that must
         be atomic with the data (e.g. a streaming fold's last-batch
         marker); a crash can never commit one without the other.
@@ -1315,55 +1354,10 @@ class VersionedParquetTable:
         they default to a keyed diff against the base snapshot."""
         if base is _UNSET_BASE:
             base = self.current_version()
-        if op != "compact":  # layout-only rewrite of validated data
-            df, _check_constraints = self._constraint_observation(df, base)
-        else:
-            _check_constraints = lambda: None  # noqa: E731
-        if cdf_df is None:
-            cdf_df = self._fallback_cdf(df, base, op)
-        version = self._next_version()
-        os.makedirs(self.path, exist_ok=True)
-        tmp_target = os.path.join(self.path, f".tmp-{uuid.uuid4().hex}")
-        if self.partition_by:
-            df = self._reject_null_partitions(df)
-        writer = df.write.mode("overwrite").format(self.fmt).options(**_FORMAT_OPTIONS[self.fmt])
-        if self.partition_by:
-            writer = writer.partitionBy(*self.partition_by)
-        with _stats_friendly_timestamps(df.sparkSession):
-            writer.save(tmp_target)
-        try:
-            _check_constraints()  # BEFORE the flip; staged dir discarded
-        except ConstraintViolation:
-            shutil.rmtree(tmp_target, ignore_errors=True)
-            raise
-        self._write_cdf(tmp_target, cdf_df)
-        # per-VERSION schema sidecar: committed atomically with the
-        # data and carried forward like other metadata, so a failed
-        # concurrent commit or schema evolution can never corrupt
-        # reads of OTHER versions (a table-root sidecar did both).
-        # Written for EVERY format: a version holding zero rows writes
-        # no data files at all (Spark emits nothing for an empty
-        # partitioned frame), and the sidecar is then the only record
-        # of the schema — read() falls back to a typed empty frame.
-        import json as _json
-
-        for fn, content in {
-            **(extra_files or {}),
-            SCHEMA: _json.dumps(df.schema.jsonValue()),
-            COMMIT_INFO: self._commit_info(op),
-        }.items():
-            with open(os.path.join(tmp_target, fn), "w") as f:
-                f.write(content)
-        self._write_added_sidecar(tmp_target)  # full rewrite: all fresh
-        self._write_stats_sidecar(tmp_target, base)
-        self._carry_forward_metadata(tmp_target, base)  # base resolved above
-        # a full rewrite wrote every data file fresh: no hardlinked
-        # pre-drop bytes survive, so drop-column tombstones clear here
-        dropped_marker = os.path.join(tmp_target, DROPPED)
-        if os.path.exists(dropped_marker):
-            os.remove(dropped_marker)
-        self._claim_version_dir(tmp_target, version)
-        self._commit(version, base=base)
+        self._commit_version(
+            df, [], base and os.path.join(self.path, base), op, base,
+            cdf_df=cdf_df, sidecars=extra_files,
+        )
 
     def merge(self, batch: DataFrame, delete: Optional[DataFrame] = None) -> None:
         """Keyed upsert (MERGE INTO … WHEN MATCHED UPDATE WHEN NOT
@@ -1440,9 +1434,7 @@ class VersionedParquetTable:
                 preimages=self.cdf_preimages(base),
             )
         if self.partition_by and not tombstone_clash:
-            self._merge_partitioned(
-                spark, current, batch, base, cdf_df=cdf, touched=touched_pre
-            )
+            self._merge_partitioned(current, batch, base, cdf, touched_pre)
         else:
             # unpartitioned — or the batch RE-INTRODUCES a dropped
             # column: untouched hardlinked partitions still hold the
@@ -1554,35 +1546,6 @@ class VersionedParquetTable:
         if self.partition_by and not (
             self._dropped_tombstones(base) & set(batch.columns)
         ):
-            dv = self._dv_df(batch.sparkSession, base)
-            if dv is not None and self.key_cols:
-                # a batch key that is DV-tombstoned would be HIDDEN by
-                # the carried vector the moment it lands (the stale
-                # physical row may live in a partition this append
-                # hardlinks, so the vector cannot simply drop the
-                # key). merge() handles re-introduction by rewriting
-                # the stale row's partition; append must not silently
-                # swallow the row. Bounded: the vector is <= 64k keys.
-                from a2b_spark.storage.diff import null_safe_key_cond
-
-                clash = (
-                    batch.alias("b")
-                    .join(
-                        F.broadcast(dv.alias("d")),
-                        null_safe_key_cond(self.key_cols, "b", "d"),
-                        "left_semi",
-                    )
-                    .limit(1)
-                    .count()
-                )
-                if clash:
-                    raise ValueError(
-                        f"append on {self.path}: batch contains a key "
-                        "that is deletion-vector-tombstoned; the carried "
-                        "vector would hide the new row. Use merge() (it "
-                        "rewrites the stale partition and trims the "
-                        "vector) or purge_deleted() first"
-                    )
             touched = (
                 touched_pre
                 if touched_pre is not None
@@ -1635,47 +1598,16 @@ class VersionedParquetTable:
             keys_df.select(*self.key_cols).distinct().localCheckpoint(eager=True)
         )
 
-        def _remaining(cur: DataFrame) -> DataFrame:
+        def _match(cur: DataFrame, how: str) -> DataFrame:
             return cur.alias("c").join(
-                keys.alias("k"),
-                null_safe_key_cond(self.key_cols, "c", "k"),
-                "left_anti",
+                keys.alias("k"), null_safe_key_cond(self.key_cols, "c", "k"), how
             )
 
+        def _remaining(cur: DataFrame) -> DataFrame:
+            return _match(cur, "left_anti")
+
         def _delete_cdf(cur: DataFrame) -> Optional[DataFrame]:
-            if not self.cdf_enabled(base):
-                return None
-            reserved = {"change", "_commit_version"} & set(cur.columns)
-            if reserved:
-                raise ValueError(
-                    "table data columns collide with reserved CDF output "
-                    f"columns {sorted(reserved)}; rename them before "
-                    "enabling CDF"
-                )
-            matched = cur.alias("c").join(
-                keys.alias("k"),
-                null_safe_key_cond(self.key_cols, "c", "k"),
-                "left_semi",
-            )
-            if self.cdf_preimages(base):
-                # pre-image contract: deletes carry their full old
-                # payload so signed folds can decrement (unique keys
-                # assumed — the keyed-table contract)
-                return matched.withColumn("change", F.lit("delete"))
-            # KEY-level delete rows (the keyed-diff contract of batch
-            # table_changes — a duplicate-keyed physical layout must
-            # still emit one row per key) with NULL payloads; one semi
-            # join bounded by the key batch
-            deleted = matched.select(*self.key_cols).distinct()
-            payload = [c for c in cur.columns if c not in set(self.key_cols)]
-            return deleted.select(
-                *self.key_cols,
-                *[
-                    F.lit(None).cast(cur.schema[c].dataType).alias(c)
-                    for c in payload
-                ],
-                F.lit("delete").alias("change"),
-            )
+            return self._delete_changes(_match(cur, "left_semi"), cur.schema, base)
 
         # deletion vectors first, partitioned or not: a small delete
         # commits metadata-sized (every data file hardlinks — the
@@ -1708,17 +1640,46 @@ class VersionedParquetTable:
             scoped = self._scan_files(
                 keys_df.sparkSession, base, kept_abs, schema
             )
-            self._commit_linked_files(
-                _remaining(scoped),
-                keep_rels,
-                op="delete",
-                base=base,
-                cdf_df=_delete_cdf(scoped),
+            self._commit_version(
+                _remaining(scoped), keep_rels, os.path.join(self.path, base),
+                op="delete", base=base, cdf_df=_delete_cdf(scoped),
             )
             return
         self.overwrite(
             _remaining(current), op="delete", base=base,
             cdf_df=_delete_cdf(current),
+        )
+
+    def _delete_changes(
+        self, matched: DataFrame, schema, base: str
+    ) -> Optional[DataFrame]:
+        """Change rows of a delete, None when CDF is off. ``matched``:
+        the deleted rows (their key columns suffice without
+        pre-images); ``schema``: the table's. With pre-images a delete
+        carries its full old payload so signed folds can decrement
+        (unique keys assumed — the keyed-table contract); otherwise one
+        KEY-level row per deleted key with a NULL payload (the keyed
+        diff of batch table_changes: a duplicate-keyed physical layout
+        still emits one row per key)."""
+        if not self.cdf_enabled(base):
+            return None
+        reserved = {"change", "_commit_version"} & set(schema.names)
+        if reserved:
+            raise ValueError(
+                "table data columns collide with reserved CDF output "
+                f"columns {sorted(reserved)}; rename them before "
+                "enabling CDF"
+            )
+        if self.cdf_preimages(base):
+            return matched.select(*schema.names).withColumn("change", F.lit("delete"))
+        return matched.select(*self.key_cols).distinct().select(
+            *self.key_cols,
+            *[
+                F.lit(None).cast(f.dataType).alias(f.name)
+                for f in schema.fields
+                if f.name not in self.key_cols
+            ],
+            F.lit("delete").alias("change"),
         )
 
     # ------------------------------------------------- partitioned merge
@@ -1777,87 +1738,29 @@ class VersionedParquetTable:
         self,
         touched_df: DataFrame,
         touched: set[tuple],
-        op: str = "merge",
-        base=_UNSET_BASE,
+        op: str,
+        base: str,
         extra_files: Optional[dict] = None,
         cdf_df: Optional[DataFrame] = None,
     ) -> None:
-        """Write a new version containing ``touched_df`` (the new
-        contents of the touched partitions) and hard-link every
-        untouched partition's files from the live version — a
-        metadata-only copy, the local-FS analogue of Iceberg manifest
-        reuse. Cost: O(touched data + total file count).
-
-        The deletion vector carries (untouched partitions may still
-        hold tombstoned bytes); entries of the rewritten partitions'
-        files leave it, those partitions having been staged from the
-        DV-FILTERED read."""
-        old_version = self.current_version()
-        if base is _UNSET_BASE:
-            base = old_version
-        stale = self._dropped_tombstones(old_version) & set(touched_df.columns)
-        if stale:
-            # unreachable via merge/append (they escalate to a full
-            # rewrite) — insurance for future call sites: hardlinking
-            # untouched partitions would resurface pre-drop values
-            raise ValueError(
-                f"column(s) {sorted(stale)} were dropped and their physical "
-                f"data survives in hardlinked files at {self.path}; "
-                "re-introduce them via a full rewrite (overwrite/merge)"
-            )
-        if op not in ("compact", "purge"):  # layout-only rewrites of
-            touched_df, _check_constraints = self._constraint_observation(
-                touched_df, base
-            )  # ^ already-validated data skip re-validation
-        else:
-            _check_constraints = lambda: None  # noqa: E731
-        if cdf_df is None:
-            # a partitioned commit can only change rows in its touched
-            # partitions — the fallback diff is bounded accordingly
-            cdf_df = self._fallback_cdf(touched_df, base, op, touched=touched)
-        old_dir = os.path.join(self.path, old_version)
-        version = self._next_version()
-        tmp_target = os.path.join(self.path, f".tmp-{uuid.uuid4().hex}")
-        with _stats_friendly_timestamps(touched_df.sparkSession):
-            (
-                self._reject_null_partitions(touched_df).write.mode("overwrite")
-                .format(self.fmt)
-                .options(**_FORMAT_OPTIONS[self.fmt])
-                .partitionBy(*self.partition_by)
-                .save(tmp_target)
-            )
-        try:  # BEFORE hard-linking untouched partitions or the flip
-            _check_constraints()
-        except ConstraintViolation:
-            shutil.rmtree(tmp_target, ignore_errors=True)
-            raise
-        self._write_cdf(tmp_target, cdf_df)
-        self._write_added_sidecar(tmp_target)  # before the hardlinks
-        for leaf, values in _leaf_partitions(old_dir, len(self.partition_by)):
-            if values in touched:
-                continue
-            dst = os.path.join(tmp_target, os.path.relpath(leaf, old_dir))
-            os.makedirs(dst, exist_ok=True)
-            for fn in os.listdir(leaf):
-                if fn.startswith(("_", ".")):
-                    continue
-                os.link(os.path.join(leaf, fn), os.path.join(dst, fn))
-        import json as _json
-
-        for fn, content in {
-            **(extra_files or {}),
-            SCHEMA: _json.dumps(touched_df.schema.jsonValue()),
-            COMMIT_INFO: self._commit_info(op),
-        }.items():
-            with open(os.path.join(tmp_target, fn), "w") as f:
-                f.write(content)
-        # old_version (the hardlink source), not base: inode reuse is
-        # against the dir the untouched partitions were linked FROM
-        self._write_stats_sidecar(tmp_target, old_version)
-        self._carry_forward_metadata(tmp_target, old_version)
-        self._stage_dv(tmp_target, old_dir)
-        self._claim_version_dir(tmp_target, version)
-        self._commit(version, base=base)
+        """Commit ``touched_df`` as the new contents of the ``touched``
+        partitions and hard-link every other partition's files from
+        ``base`` — the local-FS analogue of Iceberg manifest reuse, at
+        O(touched data + total file count). The rewritten partitions
+        were staged from the DV-filtered read, so their files' vector
+        entries leave with them."""
+        vdir = os.path.join(self.path, base)
+        linked = [
+            os.path.relpath(os.path.join(leaf, fn), vdir)
+            for leaf, values in _leaf_partitions(vdir, len(self.partition_by))
+            if values not in touched
+            for fn in os.listdir(leaf)
+            if not fn.startswith(("_", "."))
+        ]
+        self._commit_version(
+            touched_df, linked, vdir, op, base,
+            cdf_df=cdf_df, sidecars=extra_files,
+        )
 
     def _key_match_partitions(self, current: DataFrame, keys: DataFrame) -> set[tuple]:
         """Partitions of CURRENT rows whose key matches ``keys``
@@ -1879,53 +1782,19 @@ class VersionedParquetTable:
         )
 
     def _merge_partitioned(
-        self, spark: SparkSession, current: DataFrame, batch: DataFrame, base=None,
-        cdf_df: Optional[DataFrame] = None,
-        touched: Optional[set] = None,
+        self, current: DataFrame, batch: DataFrame, base: str,
+        cdf_df: Optional[DataFrame], touched: set[tuple],
     ) -> None:
-        from a2b_spark.storage.diff import null_safe_key_cond
-
-        # merge() passes the batch's touched set when its pin job
-        # already answered it (see _pin_with_touched); recompute only
-        # when called without one
-        if touched is None:
-            touched = self._touched_partitions(batch)
+        """Rewrite the partitions the batch touches (``touched``, from
+        merge()'s pin job) merged with the batch; hard-link the rest. A
+        tombstoned row in a linked file keeps its file-scoped vector
+        entry, so a re-introduced key surfaces once, from its new file."""
         if not self.partitions_derived_from_keys:
             # keys may move between partitions: also rewrite wherever
             # the batch's keys CURRENTLY live (one thin scan)
             touched = touched | self._key_match_partitions(current, batch)
         if not touched:
             return
-        dv = self._dv_df(spark, base)
-        if dv is not None:
-            # a merged key that was DV-tombstoned is RE-INTRODUCED:
-            # its stale PHYSICAL row is invisible to `current` (the
-            # DV-filtered read), so the key-match scan above cannot
-            # find its partition — locate it on the UNFILTERED read
-            # and force that partition into the rewrite set, else the
-            # commit would hardlink the stale bytes while dropping the
-            # key from the vector (resurrection + duplicate). With
-            # key-derived partitions the stale row's partition equals
-            # the batch row's and is already touched.
-            reintro = dv.alias("__dv").join(
-                batch.select(*self.key_cols).alias("__b"),
-                null_safe_key_cond(self.key_cols, "__dv", "__b"),
-                "left_semi",
-            )
-            if not self.partitions_derived_from_keys:
-                raw = self._read_nodv(spark, base)
-                touched = touched | self._touched_partitions(
-                    raw.alias("r")
-                    .join(
-                        F.broadcast(reintro.alias("k")),
-                        null_safe_key_cond(self.key_cols, "r", "k"),
-                        "left_semi",
-                    )
-                    .select(*self.partition_by)
-                )
-            # every re-introduced key's stale bytes now sit in a
-            # rewritten (DV-filtered) partition, whose old files — and
-            # so their vector entries — leave the new version
         merged_touched = merge_dataframes(
             current.filter(self._partition_filter(touched)), batch, self.key_cols
         )
@@ -1974,8 +1843,9 @@ class VersionedParquetTable:
             )
         # the rewritten files were read DV-filtered, so their vector
         # entries (a re-introduced key's included) leave with them
-        self._commit_linked_files(
-            merged, keep_rels, op="merge", base=base, cdf_df=cdf
+        self._commit_version(
+            merged, keep_rels, os.path.join(self.path, base),
+            op="merge", base=base, cdf_df=cdf,
         )
         return True
 
@@ -2083,13 +1953,9 @@ class VersionedParquetTable:
                 old_rows, batch, self.key_cols,
                 preimages=self.cdf_preimages(base),
             )
-        self._commit_linked_files(
-            new_rows,
-            [r for r in all_rels if ids[r] not in fold],
-            op="merge",
-            base=base,
-            cdf_df=cdf,
-            dv_new=entries,
+        self._commit_version(
+            new_rows, [r for r in all_rels if ids[r] not in fold], vdir,
+            op="merge", base=base, cdf_df=cdf, dv_new=entries,
         )
         return True
 
@@ -2162,36 +2028,10 @@ class VersionedParquetTable:
         carried = sum(self._dv_file_counts(vdir).values())
         if entries.num_rows + carried > DV_MAX_KEYS:
             return False  # vector would outgrow its broadcast budget
-        cdf = None
-        if self.cdf_enabled(base):
-            reserved = {"change", "_commit_version"} & set(current.columns)
-            if reserved:
-                raise ValueError(
-                    "table data columns collide with reserved CDF output "
-                    f"columns {sorted(reserved)}; rename them before "
-                    "enabling CDF"
-                )
-            if self.cdf_preimages(base):
-                cdf = matched.drop(DV_FILE).withColumn("change", F.lit("delete"))
-            else:
-                # key-level NULL-payload delete rows from the same match
-                payload = [
-                    c for c in current.columns if c not in set(self.key_cols)
-                ]
-                cdf = matched.select(*self.key_cols).distinct().select(
-                    *self.key_cols,
-                    *[
-                        F.lit(None).cast(current.schema[c].dataType).alias(c)
-                        for c in payload
-                    ],
-                    F.lit("delete").alias("change"),
-                )
-        self._commit_linked_files(
+        self._commit_version(
             None,  # no new rows: hardlinks + vector only
-            keep_rels,
-            op="delete",
-            base=base,
-            cdf_df=cdf,
+            keep_rels, vdir, op="delete", base=base,
+            cdf_df=self._delete_changes(matched, current.schema, base),
             dv_new=entries,
         )
         return True
@@ -2200,8 +2040,8 @@ class VersionedParquetTable:
         """Physically remove the deletion vector's tombstoned rows —
         the DV maintenance op (Delta's REORG TABLE ... APPLY (PURGE)):
         rewrite ONLY the data files the vector names (DV-filtered
-        read) — or, on a PARTITIONED table, the partitions holding
-        them — hardlink everything else, and clear the vector. A
+        read, into the same partitions on a partitioned table),
+        hardlink everything else, and clear the vector. A
         layout-only commit: row content is identical before and after
         (CDF consumers skip it), but the table stops paying the
         per-read anti join and vacuum can eventually reclaim the
@@ -2219,48 +2059,15 @@ class VersionedParquetTable:
 
         n_keys = sum(named.values())
         all_rels = _stats._data_files(vdir)
-        if self.partition_by:
-            # PARTITION-granular purge: rewrite the partitions holding
-            # a named file DV-filtered, hardlink the rest. The vector
-            # clears because its entries name only rewritten files.
-            # _commit_linked_files is layout-unsafe here — its writer
-            # would stage root-level files into a hive-partitioned dir.
-            ids = self._file_ids(vdir)
-            touched, n_linked = set(), 0
-            for leaf, values in _leaf_partitions(vdir, len(self.partition_by)):
-                rels = [
-                    os.path.relpath(os.path.join(leaf, f), vdir)
-                    for f in os.listdir(leaf)
-                ]
-                if any(ids.get(r) in named for r in rels):
-                    touched.add(values)
-                else:
-                    n_linked += sum(r in ids for r in rels)
-            if touched:
-                scoped = self.read(spark, version=base).filter(
-                    self._partition_filter(touched)
-                )
-                self._commit_touched(scoped, touched, op="purge", base=base)
-            else:
-                # vector entries with no physical file left: clear the
-                # vector with an all-hardlink commit
-                self._commit_linked_files(None, all_rels, op="purge", base=base)
-            return {
-                "files_rewritten": len(all_rels) - n_linked,
-                "files_linked": n_linked,
-                "purged_keys": n_keys,
-            }
         ids = self._file_ids(vdir)
         rewrite = [r for r in all_rels if ids.get(r) in named]
         keep_rels = [r for r in all_rels if ids.get(r) not in named]
-        self._commit_linked_files(
+        self._commit_version(
             self._scan_files(
                 spark, base, [os.path.join(vdir, r) for r in rewrite],
                 self._version_schema(base),
             ) if rewrite else None,
-            keep_rels,
-            op="purge",
-            base=base,
+            keep_rels, vdir, op="purge", base=base,
         )
         return {
             "files_rewritten": len(rewrite),
@@ -2446,72 +2253,6 @@ class VersionedParquetTable:
             if i < len(keys_sorted) and keys_sorted[i] <= mx:
                 kept.add(rel)
         return kept
-
-    def _commit_linked_files(
-        self,
-        df: Optional[DataFrame],
-        keep_rels,
-        op: str,
-        base: str,
-        cdf_df: Optional[DataFrame] = None,
-        dv_new=None,
-    ) -> None:
-        """File-granular sibling of :meth:`_commit_touched`, THE commit
-        of "linked files + new files + vector": write ``df`` as this
-        commit's new files and hard-link every ``keep_rels`` data file
-        from ``base`` (metadata-only). Constraint observation rides the
-        staging write; stats entries for linked files reuse the base
-        sidecar by inode. The base's deletion vector carries (minus the
-        entries of files not linked); ``dv_new`` (a pyarrow table of
-        ``(DV_FILE, *key_cols)`` entries) adds this commit's
-        tombstones. ``df=None``: a NO-NEW-ROWS commit (a
-        deletion-vector delete) — nothing is staged through Spark
-        (whose writer emits a schema-preserving empty part file even
-        for an empty frame), constraints trivially hold, and the schema
-        sidecar carries forward from the base."""
-        old_dir = os.path.join(self.path, base)
-        version = self._next_version()
-        tmp_target = os.path.join(self.path, f".tmp-{uuid.uuid4().hex}")
-        if df is None:
-            os.makedirs(tmp_target)
-        else:
-            if op == "purge":  # layout-only rewrite of validated data
-                _check_constraints = lambda: None  # noqa: E731
-            else:
-                df, _check_constraints = self._constraint_observation(df, base)
-            with _stats_friendly_timestamps(df.sparkSession):
-                (
-                    df.write.mode("overwrite")
-                    .format(self.fmt)
-                    .options(**_FORMAT_OPTIONS[self.fmt])
-                    .save(tmp_target)
-                )
-            try:  # BEFORE hard-linking untouched files or the flip
-                _check_constraints()
-            except ConstraintViolation:
-                shutil.rmtree(tmp_target, ignore_errors=True)
-                raise
-            if keep_rels:
-                self._drop_empty_write(tmp_target)
-        self._write_cdf(tmp_target, cdf_df)
-        self._write_added_sidecar(tmp_target)  # before the hardlinks
-        for rel in keep_rels:
-            dst = os.path.join(tmp_target, rel)
-            os.makedirs(os.path.dirname(dst), exist_ok=True)
-            os.link(os.path.join(old_dir, rel), dst)
-        import json as _json
-
-        contents = {COMMIT_INFO: self._commit_info(op)}
-        if df is not None:
-            contents[SCHEMA] = _json.dumps(df.schema.jsonValue())
-        for fn, content in contents.items():
-            with open(os.path.join(tmp_target, fn), "w") as f:
-                f.write(content)
-        self._write_stats_sidecar(tmp_target, base)
-        self._carry_forward_metadata(tmp_target, base)
-        self._stage_dv(tmp_target, old_dir, dv_new)
-        self._claim_version_dir(tmp_target, version)
-        self._commit(version, base=base)
 
     def _drop_empty_write(self, tmp_target: str) -> None:
         """Spark's writer stages one 0-row part file for an empty frame

@@ -31,7 +31,7 @@ read-fold-commit span.
 
 Marker durability: ``_LAST_BATCH`` rides in ``extra_files`` and the
 table carries ``_``-prefixed metadata files forward on EVERY commit
-(``_carry_forward_metadata``), so maintenance operations — compact,
+(``VersionedParquetTable._commit_version``), so maintenance operations — compact,
 merge, retract — on a rollup table no longer erase the marker and
 re-expose the double-count hazard."""
 

@@ -282,14 +282,17 @@ def test_dv_partitioned_merge_reintroduces_key(spark, tmp_path, derived):
     assert [r.v for r in raw.collect() if r.k == 5] == ["back"]
 
 
-def test_dv_partitioned_append_tombstoned_key_raises(spark, tmp_path):
+def test_dv_partitioned_append_tombstoned_key_reads_once(spark, tmp_path):
+    """Appending a tombstoned key back, into another partition than its
+    stale row's: the stale partition hard-links with its vector entry,
+    which names the old file only, so the new row surfaces once."""
     t = _dv_ptable(spark, tmp_path)
     t.delete_keys(spark.createDataFrame([(5,)], "k long"))
-    with pytest.raises(ValueError, match="tombstoned"):
-        t.append(spark.createDataFrame([(5, 1, "x")], "k long, p int, v string"))
-    # fresh keys still append fine
-    t.append(spark.createDataFrame([(200, 2, "y")], "k long, p int, v string"))
-    assert 200 in {r.k for r in t.read(spark).collect()}
+    t.append(spark.createDataFrame([(5, 2, "x")], "k long, p int, v string"))
+    assert [(r.p, r.v) for r in t.read(spark).collect() if r.k == 5] == [(2, "x")]
+    # the stale row still lies on disk, hidden by its entry
+    raw = t._read_nodv(spark)
+    assert sorted(r.v for r in raw.collect() if r.k == 5) == ["v5", "x"]
 
 
 def test_dv_partitioned_purge(spark, tmp_path):
@@ -395,3 +398,173 @@ def test_dv_delete_match_scan_is_stats_scoped(spark, tmp_path, monkeypatch):
     assert 0 < len(calls[-1]) < total, (len(calls[-1]), total)
     got = sorted(r.k for r in p.read(spark).collect())
     assert got == sorted(set(range(400)) - {5, 200})
+
+
+def _spread_table(spark, tmp_path, name="spread", **kw):
+    """Four files whose key bands all span the key range: no file
+    isolates a key, so a merge commits merge-on-read."""
+    t = VersionedParquetTable(
+        str(tmp_path / name), key_cols=("k",), retention=10, **kw
+    )
+    t.overwrite(
+        spark.range(40)
+        .select(F.col("id").alias("k"), F.concat(F.lit("v"), F.col("id")).alias("v"))
+        .repartition(4)
+    )
+    return t
+
+
+def test_dv_clone_merges_on_read(spark, tmp_path):
+    """A clone keeps the source's ``deletion_vectors`` flag: its merge
+    links every base file and tombstones the replaced row."""
+    c = _spread_table(spark, tmp_path, deletion_vectors=True).clone(
+        str(tmp_path / "clone")
+    )
+    base = os.path.join(c.path, c.current_version())
+    c.merge(spark.createDataFrame([(3, "x")], "k long, v string"))
+    vdir = os.path.join(c.path, c.current_version())
+    assert os.path.isdir(os.path.join(vdir, DV_DIR))
+    linked = {os.stat(p).st_ino for p in _data_files(vdir)}
+    assert {os.stat(p).st_ino for p in _data_files(base)} <= linked
+    assert [r.v for r in c.read(spark).collect() if r.k == 3] == ["x"]
+
+
+def _keys(spark, *ks):
+    return spark.createDataFrame([(k,) for k in ks], "k long")
+
+
+def _kv(spark, rows):
+    return spark.createDataFrame(rows, "k long, v string")
+
+
+def _pkv(spark, rows):
+    return spark.createDataFrame(rows, "k long, p int, v string")
+
+
+def _overwrite(spark, tmp_path):
+    t = _spread_table(spark, tmp_path, deletion_vectors=True)
+    t.delete_keys(_keys(spark, 3))
+    src = t.current_version()
+    t.overwrite(_kv(spark, [(1, "a"), (2, "b")]))
+    return t, os.path.join(t.path, src)
+
+
+def _mor_merge(spark, tmp_path):
+    t = _spread_table(spark, tmp_path, deletion_vectors=True)
+    src = t.current_version()
+    t.merge(_kv(spark, [(3, "x"), (100, "new")]))
+    return t, os.path.join(t.path, src)
+
+
+def _pruned_merge(spark, tmp_path):
+    t = VersionedParquetTable(str(tmp_path / "clustered"), key_cols=("k",))
+    t.overwrite(
+        spark.range(40)
+        .select(F.col("id").alias("k"), F.col("id").cast("string").alias("v"))
+        .repartitionByRange(4, "k")
+    )
+    src = t.current_version()
+    t.merge(_kv(spark, [(3, "x")]))
+    return t, os.path.join(t.path, src)
+
+
+def _partitioned_merge(spark, tmp_path):
+    t = _dv_ptable(spark, tmp_path)
+    t.delete_keys(_keys(spark, 5))
+    src = t.current_version()
+    t.merge(_pkv(spark, [(7, 3, "x")]))
+    return t, os.path.join(t.path, src)
+
+
+def _dv_delete(spark, tmp_path):
+    t = _dv_ptable(spark, tmp_path)
+    src = t.current_version()
+    t.delete_keys(_keys(spark, 5, 6))
+    return t, os.path.join(t.path, src)
+
+
+def _purge(spark, tmp_path):
+    t = _dv_ptable(spark, tmp_path)
+    t.delete_keys(_keys(spark, 4, 9))
+    src = t.current_version()
+    assert t.purge_deleted(spark)["purged_keys"] == 2
+    return t, os.path.join(t.path, src)
+
+
+def _restore(spark, tmp_path):
+    t = _spread_table(spark, tmp_path, deletion_vectors=True)
+    t.delete_keys(_keys(spark, 3))
+    src = t.current_version()
+    t.merge(_kv(spark, [(4, "x")]))
+    t.restore(src)
+    return t, os.path.join(t.path, src)
+
+
+def _clone(spark, tmp_path):
+    t = _dv_ptable(spark, tmp_path)
+    t.delete_keys(_keys(spark, 5))
+    return t.clone(str(tmp_path / "clone")), os.path.join(t.path, t.current_version())
+
+
+def _add_constraint(spark, tmp_path):
+    t = _spread_table(spark, tmp_path, deletion_vectors=True)
+    t.delete_keys(_keys(spark, 3))
+    src = t.current_version()
+    t.add_constraint(spark, "k_nonneg", "k >= 0")
+    return t, os.path.join(t.path, src)
+
+
+def _disable_cdf(spark, tmp_path):
+    t = _spread_table(spark, tmp_path, deletion_vectors=True)
+    t.enable_cdf()
+    t.delete_keys(_keys(spark, 3))
+    src = t.current_version()
+    t.disable_cdf()
+    assert not t.cdf_enabled()  # the omitted sidecar stays omitted
+    return t, os.path.join(t.path, src)
+
+
+_COMMITS = {
+    "overwrite": _overwrite,
+    "merge-on-read": _mor_merge,
+    "file-pruned merge": _pruned_merge,
+    "partitioned merge": _partitioned_merge,
+    "dv delete": _dv_delete,
+    "purge": _purge,
+    "restore": _restore,
+    "clone": _clone,
+    "add_constraint": _add_constraint,
+    "disable_cdf": _disable_cdf,
+}
+
+
+@pytest.mark.parametrize("kind", list(_COMMITS))
+def test_every_commit_keeps_the_version_invariant(spark, tmp_path, kind):
+    """Whatever the commit kind: ``_ADDED`` lists exactly the new data
+    files (no inode shared with the version the commit was built
+    from), ``_SCHEMA`` and ``_COMMIT_INFO`` are written, and every
+    vector entry names a data file of the new version."""
+    import json
+
+    import pyarrow.parquet as pq
+
+    from a2b_spark.storage.table import ADDED, COMMIT_INFO, DV_FILE, SCHEMA
+
+    t, src = _COMMITS[kind](spark, tmp_path)
+    vdir = os.path.join(t.path, t.current_version())
+    src_inodes = {os.stat(p).st_ino for p in _data_files(src)}
+    new = {
+        os.path.relpath(p, vdir)
+        for p in _data_files(vdir)
+        if os.stat(p).st_ino not in src_inodes
+    }
+    with open(os.path.join(vdir, ADDED)) as f:
+        assert set(json.load(f)) == new
+    assert os.path.isfile(os.path.join(vdir, SCHEMA))
+    assert os.path.isfile(os.path.join(vdir, COMMIT_INFO))
+    named = {
+        name
+        for delta in t._dv_deltas(vdir)
+        for name in pq.read_table(delta, columns=[DV_FILE]).column(0).to_pylist()
+    }
+    assert named <= set(t._file_ids(vdir).values())

@@ -106,6 +106,17 @@ def test_skip_rows(spark, tmp_path, customers):
     assert r.rows_skipped > 0
 
 
+def test_transform_folded_to_empty_still_counts_rows_in(spark, tmp_path, customers):
+    """Catalyst folds ``filter(lit(False))`` to an empty relation, which
+    drops the observed node: rows_in still counts the source rows."""
+    m = make_migration(
+        tmp_path, customers.limit(30),
+        lambda df: basic_transform(df).filter(F.lit(False)),
+    )
+    r = run_migration(spark, m, MappingStore(spark, str(tmp_path / "maps")))
+    assert (r.rows_in, r.rows_written) == (30, 0)
+
+
 @pytest.mark.parametrize("policy", ["keep", "prune", "report", "preserve"])
 def test_orphans(spark, tmp_path, customers, policy):
     full = customers.limit(40)

@@ -146,14 +146,14 @@ def test_crash_between_commits_converges(
     if crash_at == "mapping_merge":
         monkeypatch.setattr(MappingStore, "merge", boom)
     else:
-        commit = VersionedParquetTable._commit_linked_files
+        commit = VersionedParquetTable._commit_version
 
         def torn(self, *a, **k):
             tombstones.append(k["dv_new"].num_rows)
             monkeypatch.setattr(VersionedParquetTable, "_claim_version_dir", boom)
             commit(self, *a, **k)
 
-        monkeypatch.setattr(VersionedParquetTable, "_commit_linked_files", torn)
+        monkeypatch.setattr(VersionedParquetTable, "_commit_version", torn)
     with pytest.raises(RuntimeError, match="injected crash"):
         _run(spark, v[then], crashed)
     monkeypatch.undo()

@@ -7,7 +7,7 @@ table and asserts, at every step:
 
 - ``read()`` ≡ a pure-Python dict model of the table,
 - atomicity: an op that RAISES (the documented loud contracts — e.g.
-  append of an existing or tombstoned key) leaves the committed
+  append of an existing key) leaves the committed
   version and content untouched,
 - IVM: ``refresh_rollup`` after every commit keeps the rollup equal
   to a full group-by recompute of the model,
@@ -229,8 +229,8 @@ def _run_sequence(spark, tmp_path, dv, partitioned, ops, fmt="parquet"):
         except (ValueError, AssertionError) as e:
             if isinstance(e, AssertionError):
                 raise
-            # documented loud contract (e.g. DV-tombstoned or existing
-            # key appended): the table must be EXACTLY as before
+            # documented loud contract (e.g. an existing key
+            # appended): the table must be EXACTLY as before
             assert src.current_version_number() == before_v, (kind, e)
             check_read()
             continue
